@@ -24,14 +24,7 @@ object IndexCli {
 
   def main(args: Array[String]): Unit = {
     val (indexDir, configPath, sources, tokenize, databases) = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-index")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session("graft-index")
     try run(spark, indexDir, configPath, sources, tokenize, databases)
     finally spark.stop()
   }

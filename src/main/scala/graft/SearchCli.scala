@@ -1,10 +1,9 @@
 package graft
 
 import graft.query.SearchEngine
-import graft.query.SearchEngine.{Request, TextArtifacts}
+import graft.query.SearchEngine.Request
 import graft.serve.SearchPage
 import graft.text.Tokenize
-import org.apache.spark.sql.SparkSession
 
 /** Query CLI over an [[IndexCli]]-built index directory — together they
   * replace the reference's index-CLI + `/-/beta` endpoint pair for a
@@ -41,30 +40,13 @@ object SearchCli {
         case other => throw new IllegalArgumentException(s"unknown arg: $other")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-search")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session("graft-search")
     try {
       val index = spark.read.parquet(s"$indexDir/search_index")
-      // positions are optional (older index dirs): phrases fall back to
-      // the candidate-verify path when absent
-      val positions =
-        if (new java.io.File(s"$indexDir/positions").exists())
-          Some(spark.read.parquet(s"$indexDir/positions"))
-        else None
-      val arts = TextArtifacts(
-        spark.read.parquet(s"$indexDir/doc_tokens"),
-        spark.read.parquet(s"$indexDir/postings"),
-        positions)
       val out = SearchEngine.search(spark, index,
         Request(q = Some(q), sort = sort, typeFilter = typeFilter,
           isPublic = isPublic, tokenize = tokenize),
-        Some(arts), limitSearch = limit)
+        Some(Cli.textArtifacts(spark, indexDir)), limitSearch = limit)
       val rows = out.collect()
       rows.foreach { r =>
         val m = out.columns.map(c =>

@@ -1,10 +1,8 @@
 package graft
 
 import graft.core.Config
-import graft.query.SearchEngine.TextArtifacts
 import graft.serve.BetaServer
 import graft.text.Tokenize
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Serve the `/-/beta` page over an [[IndexCli]]-built index directory —
@@ -44,28 +42,14 @@ object ServeCli {
         case other => throw new IllegalArgumentException(s"unknown arg: $other")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session("graft-serve")
     sources.foreach { case (view, path) =>
       spark.read.parquet(path).createOrReplaceTempView(view)
     }
     val rules = Config.parseMetadata(Files.readString(Paths.get(configPath)))
     val index = spark.read.parquet(s"$indexDir/search_index").cache()
     index.count() // materialize the cache before the first request
-    val positions =
-      if (new java.io.File(s"$indexDir/positions").exists())
-        Some(spark.read.parquet(s"$indexDir/positions"))
-      else None
-    val arts = TextArtifacts(
-      spark.read.parquet(s"$indexDir/doc_tokens"),
-      spark.read.parquet(s"$indexDir/postings"),
-      positions)
+    val arts = Cli.textArtifacts(spark, indexDir)
     val server = BetaServer.start(spark, index, rules, Some(arts), port,
       tokenize, templateDebug)
     println(s"serving http://localhost:${server.getAddress.getPort}/-/beta")

@@ -117,7 +117,11 @@ case class SortedIntersect(left: Expression, right: Expression)
     }
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && left.dataType == right.dataType)
+    // element types only: a parquet-read array allows nulls where the
+    // output of an earlier intersect does not
+    if (elemOk(left.dataType) && elemOk(right.dataType) &&
+        left.dataType.asInstanceOf[ArrayType].elementType ==
+          right.dataType.asInstanceOf[ArrayType].elementType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"sorted_intersect expects two array<bigint>/array<int>/array<string> " +

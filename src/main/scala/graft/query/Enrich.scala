@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * anti-pattern (a job per row), so the same contract executes as ONE
   * batched join per type:
   *
-  *  - `:q` is substituted as a string literal (it is constant for the
-  *    page);
+  *  - `:q` is bound as a named SQL parameter on both paths (it is
+  *    constant for the page), never spliced into the statement text, so
+  *    no query string can change what the statement selects;
   *  - `... WHERE <expr> = :key` is rewritten to project `<expr>` as a
   *    join column, and the (arbitrarily large) detail relation is
   *    PRUNED FIRST by a semi-join against the broadcast page keys
@@ -27,9 +28,11 @@ import org.apache.spark.sql.functions._
   *    deterministic row_number()=1 per key (SURVEY §2.3 J3);
   *  - `:key` in any OTHER position (compound WHERE, non-terminal
   *    predicate, select list — the reference binds it as a parameter
-  *    anywhere) runs as a LATERAL correlated subquery over the
-  *    broadcast page keys, which Catalyst decorrelates into one
-  *    batched plan (see [[lateralDetail]]).
+  *    anywhere) runs as a LATERAL correlated subquery over the page
+  *    keys, bound as `VALUES` parameters, which Catalyst decorrelates
+  *    into one batched plan (see [[lateralDetail]]).
+  *
+  * Neither path registers a temp view or other session state.
   */
 object Enrich {
 
@@ -45,25 +48,23 @@ object Enrich {
     * instead (the documented contract is a single `<expr> = :key`
     * equality; README.md:147-160).
     */
-  private[graft] def rewrite(displaySql: String, q: String): (String, String) = {
-    val escapedQ = "'" + q.replace("'", "''") + "'"
-    val sql = displaySql.replace(":q", escapedQ)
-    sql match {
+  private[graft] def rewrite(displaySql: String): (String, String) =
+    displaySql match {
       case whereKey(head, keyExpr) =>
         if (hasTopLevelBoolOp(keyExpr))
           throw new IllegalArgumentException(
             "display_sql WHERE must be a single `<expr> = :key` equality; " +
               s"got a compound predicate ending in `$keyExpr = :key`: $displaySql")
-        if (head.contains(":key") || keyExpr.contains(":key"))
+        // the key expression is parsed alone, where no parameter binds
+        if (head.contains(":key") || keyExpr.contains(":key") || keyExpr.contains(":q"))
           throw new IllegalArgumentException(
             "display_sql uses :key outside the trailing `<expr> = :key` " +
-              s"equality (general-path shape): $displaySql")
+              s"equality, or :q in the key expression (general-path shape): $displaySql")
         (head.trim, keyExpr.trim)
       case _ =>
         throw new IllegalArgumentException(
           s"display_sql must end in `where <expr> = :key` (README.md:147-160): $displaySql")
     }
-  }
 
   /** True if `expr` contains an AND/OR keyword at paren-depth 0 outside
     * string literals AND quoted identifiers — i.e. it is a boolean
@@ -100,7 +101,7 @@ object Enrich {
     * relation to the page's result keys.
     *
     * @param results page rows (must contain `type` and `key`)
-    * @param q       the user query string (substituted for `:q`)
+    * @param q       the user query string (bound to `:q`)
     * @return results of this rule's type, left-joined with the
     *         display_sql columns (prefixed `display_`)
     */
@@ -110,8 +111,6 @@ object Enrich {
     case Some(displaySql) => enrichWith(spark, rule, results, displaySql, q)
   }
 
-  private val lateralViewId = new java.util.concurrent.atomic.AtomicLong()
-
   private def enrichWith(spark: SparkSession, rule: IndexRule,
       results: DataFrame, displaySql: String, q: String): DataFrame = {
     val typed = results.filter(col("type") === rule.typeTag)
@@ -119,18 +118,18 @@ object Enrich {
     val pageKeys = typed.select(col("key").as("__join_key")).distinct()
     val pruned =
       try {
-        val (body, keyExpr) = rewrite(displaySql, q)
+        val (body, keyExpr) = rewrite(displaySql)
         // fast path (the documented `... where <expr> = :key` shape):
         // project the key expr and prune the (full-table) detail scan
         // down to the page's keys BEFORE any window — a
         // BroadcastHashJoin(LeftSemi) with the tiny key side broadcast;
         // at scale this is a selective scan, not a table copy
-        spark.sql(body)
+        spark.sql(body, Map("q" -> q))
           .withColumn("__join_key", expr(keyExpr).cast("string"))
           .join(broadcast(pageKeys), Seq("__join_key"), "left_semi")
       } catch {
         case _: IllegalArgumentException if displaySql.contains(":key") =>
-          lateralDetail(spark, pageKeys, displaySql, q)
+          lateralDetail(spark, pageKeys.collect().map(_.getString(0)).toSeq, displaySql, q)
       }
     // reference takes the FIRST row if display_sql yields several;
     // the window now runs over ≤ pageKeys·fanout rows, not the table
@@ -150,32 +149,25 @@ object Enrich {
   /** General path for display_sql with `:key` in ANY predicate or
     * expression position (the reference binds `:key` as a parameter
     * anywhere; __init__.py:161-168): run the statement as a LATERAL
-    * correlated subquery against the (tiny, ≤ pageSize) page-key
-    * relation, substituting the outer key column for `:key`. Catalyst
-    * decorrelates the inner query — an equality correlation becomes an
-    * ordinary join on the detail table (one scan, not one per key),
-    * and non-equi / multi-use correlations become join conditions —
-    * so the reference's per-row point query executes as one batched
-    * plan here too, just without the semi-join prune the single-
-    * equality fast path gets.
+    * correlated subquery against the (≤ pageSize) page keys,
+    * substituting the outer key column for `:key`. The keys enter the
+    * statement as bound `VALUES` rows, like `:q`. Catalyst decorrelates
+    * the inner query — an equality correlation becomes an ordinary join
+    * on the detail table (one scan, not one per key), and non-equi /
+    * multi-use correlations become join conditions — so the reference's
+    * per-row point query executes as one batched plan here too, just
+    * without the semi-join prune the single-equality fast path gets.
     */
-  private def lateralDetail(spark: SparkSession, pageKeys: DataFrame,
+  private def lateralDetail(spark: SparkSession, pageKeys: Seq[String],
       displaySql: String, q: String): DataFrame = {
-    val escapedQ = "'" + q.replace("'", "''") + "'"
-    val sql = displaySql.replace(":q", escapedQ)
-      .replace(":key", "__pk.__join_key")
-    val view = s"__graft_page_keys_${lateralViewId.incrementAndGet()}"
-    pageKeys.createOrReplaceTempView(view)
+    // no keys: one NULL key, which matches no result row in the final join
+    val keys = if (pageKeys.isEmpty) Seq(null) else pageKeys
+    val rows = keys.indices.map(i => s"(CAST(:__key$i AS STRING))").mkString(", ")
+    val args = keys.zipWithIndex.map { case (k, i) => s"__key$i" -> k }.toMap + ("q" -> q)
     spark.sql(
       s"""SELECT __pk.__join_key, __d.*
-         |FROM $view __pk JOIN LATERAL ($sql) __d""".stripMargin)
+         |FROM VALUES $rows AS __pk(__join_key)
+         |JOIN LATERAL (${displaySql.replace(":key", "__pk.__join_key")}) __d""".stripMargin,
+      args)
   }
-
-  /** Enrich a full page: one batched join per type present in the
-    * results (≲ number of rules, each against ≤ pageSize keys), then
-    * union — versus the reference's one query per RESULT ROW.
-    */
-  def enrichPage(spark: SparkSession, rules: Seq[IndexRule], results: DataFrame,
-      q: String): Map[String, DataFrame] =
-    rules.map(r => r.typeTag -> enrichType(spark, r, results, q)).toMap
 }

@@ -498,13 +498,18 @@ object SearchEngine {
   final case class TextArtifacts(docTokens: DataFrame, postings: DataFrame,
       positions: Option[DataFrame] = None)
 
-  /** Full pipeline. Returns the reference's projection + `score` when a
-    * query term is present (reference __init__.py:27-35).
+  /** The rows a request selects before ranking: the index under the
+    * request's filters (`type`/`category`/`is_public`/date) and, when
+    * `q` parses, inner-joined to its match set (MATCH hits the whole
+    * FTS index, the filters land on search_index — same as the
+    * reference). Also returns the parsed query and the artifacts it
+    * matched against; None is a timeline request. [[search]] ranks
+    * these rows and the page counts its facets over them, so results
+    * and facets always come from one filter + match plan
+    * (reference __init__.py:57-66, 200-223).
     */
-  def search(spark: SparkSession, index: DataFrame, req: Request,
-      artifacts: Option[TextArtifacts] = None,
-      limitSearch: Int = 100, limitTimeline: Int = 40): DataFrame = {
-
+  def filteredMatch(index: DataFrame, req: Request,
+      artifacts: Option[TextArtifacts] = None): (DataFrame, Option[(Node, TextArtifacts)]) = {
     val filtered = Seq[Option[Column]](
       req.typeFilter.map(col("type") === _),
       // try_cast: a malformed querystring value ("banana") must filter
@@ -517,41 +522,46 @@ object SearchEngine {
 
     // blank-query normalize: whitespace-only == timeline (reference
     // __init__.py:64,115; tests/test_plugin.py:122-124)
-    val parsed =
-      req.q.flatMap(FtsQuery.parseRequest(_, req.tokenize, req.rawMode))
-
-    parsed match {
-      case None =>
-        // timeline mode (reference TIMELINE_SQL __init__.py:8-24)
-        val sorted = req.sort match {
-          case Some("oldest") => filtered.orderBy(col("timestamp").asc, col("type"), col("key"))
-          case _              => filtered.orderBy(col("timestamp").desc, col("type"), col("key"))
-        }
-        sorted
-          .select("type", "key", "title", "timestamp", "category", "is_public", "search_1")
-          .limit(limitTimeline)
-
+    req.q.flatMap(FtsQuery.parseRequest(_, req.tokenize, req.rawMode)) match {
+      case None => (filtered, None)
       case Some(node) =>
         val arts = artifacts.getOrElse {
           val toks = TextIndex.docTokens(index, req.tokenize)
           TextArtifacts(toks, TextIndex.postings(toks))
         }
-        // match over the corpus; the final inner join with `filtered`
-        // applies the WHERE leg (same as the reference: MATCH hits the
-        // whole FTS index, filters land on search_index).
-        val matched = matchSet(arts, node)
+        (filtered.join(matchSet(arts, node), Seq("type", "key")), Some(node -> arts))
+    }
+  }
+
+  /** Full pipeline. Returns the reference's projection + `score` when a
+    * query term is present (reference __init__.py:27-35).
+    */
+  def search(spark: SparkSession, index: DataFrame, req: Request,
+      artifacts: Option[TextArtifacts] = None,
+      limitSearch: Int = 100, limitTimeline: Int = 40): DataFrame =
+    filteredMatch(index, req, artifacts) match {
+      case (base, None) =>
+        // timeline mode (reference TIMELINE_SQL __init__.py:8-24)
+        val sorted = req.sort match {
+          case Some("oldest") => base.orderBy(col("timestamp").asc, col("type"), col("key"))
+          case _              => base.orderBy(col("timestamp").desc, col("type"), col("key"))
+        }
+        sorted
+          .select("type", "key", "title", "timestamp", "category", "is_public", "search_1")
+          .limit(limitTimeline)
+
+      case (base, Some((node, arts))) =>
         val terms = FtsQuery.positiveTerms(node).distinct
         val scored =
-          if (terms.isEmpty) matched.withColumn("score", lit(0.0))
-          else matched.join(
+          if (terms.isEmpty) base.withColumn("score", lit(0.0))
+          else base.join(
             bm25Scores(spark, arts.postings, arts.docTokens, terms), Seq("type", "key"), "left")
             .withColumn("score", coalesce(col("score"), lit(0.0)))
         val rounded = scored.withColumn("score", round(col("score"), 4))
-        val joined = rounded.join(filtered, Seq("type", "key"))
         val sorted = req.sort match {
-          case Some("newest") => joined.orderBy(col("timestamp").desc, col("type"), col("key"))
-          case Some("oldest") => joined.orderBy(col("timestamp").asc, col("type"), col("key"))
-          case _ => joined.orderBy(col("score").desc, col("timestamp").desc, col("type"), col("key"))
+          case Some("newest") => rounded.orderBy(col("timestamp").desc, col("type"), col("key"))
+          case Some("oldest") => rounded.orderBy(col("timestamp").asc, col("type"), col("key"))
+          case _ => rounded.orderBy(col("score").desc, col("timestamp").desc, col("type"), col("key"))
         }
         // projection matches the reference SEARCH_SQL (__init__.py:27-35):
         // search_1 included (ADVICE r2)
@@ -560,5 +570,4 @@ object SearchEngine {
             "search_1", "score")
           .limit(limitSearch)
     }
-  }
 }

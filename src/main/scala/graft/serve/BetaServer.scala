@@ -20,6 +20,11 @@ import java.nio.charset.StandardCharsets
   * join per result type — see [[SearchPage.assemble]]); the handler
   * thread only launches them, so a 1000-executor cluster serves the
   * same page the local session does.
+  *
+  * A request leaves the session as it found it: page assembly
+  * registers no temp view, enrichment runs over the page's own rows,
+  * and `q` reaches `display_sql` only as a bound `:q` parameter. The
+  * JDK server still handles one request at a time.
   */
 object BetaServer {
 

@@ -3,8 +3,7 @@ package graft.serve
 import graft.core.{IndexRule, Schema}
 import graft.query.{Enrich, SearchEngine}
 import graft.query.SearchEngine.{Request, TextArtifacts}
-import graft.text.FtsQuery
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.net.URLEncoder
@@ -23,6 +22,14 @@ import java.net.URLEncoder
   * count + all four facets (capped per facet INSIDE the job — the
   * driver never collects an unbounded value list), and one enrichment
   * join per result type.
+  *
+  * Results and facets share one filter + match plan
+  * ([[SearchEngine.filteredMatch]]); facets use `Dataset.groupingSets`,
+  * so a request registers no temp view and touches no other session
+  * state, and concurrent requests cannot see each other's rows.
+  * Enrichment reads the page's collected rows (a local relation of
+  * ≤ page-size rows), never the lazy top-k plan, and binds `:q` as a
+  * SQL parameter (see [[Enrich]]).
   */
 object SearchPage {
 
@@ -121,8 +128,8 @@ object SearchPage {
   }
 
   /** Assemble the page for a request. `arts` = prebuilt text artifacts;
-    * facets reflect the same filtered+matched set the results come from
-    * (reference __init__.py:200-223).
+    * facets count the same filtered+matched rows the results are ranked
+    * from (reference __init__.py:200-223).
     */
   def assemble(spark: SparkSession, index: DataFrame, rules: Seq[IndexRule],
       req: Request, arts: Option[TextArtifacts] = None,
@@ -130,94 +137,57 @@ object SearchPage {
 
     val q = req.q.getOrElse("").trim
     val results = SearchEngine.search(spark, index, req, arts)
-
-    // the facet base: same filters + match as the result set, pre-top-k
-    val parsed =
-      req.q.flatMap(FtsQuery.parseRequest(_, req.tokenize, req.rawMode))
-    val filtered = Seq(
-      req.typeFilter.map(v => col("type") === v),
-      // try_cast, like SearchEngine.search: a malformed querystring
-      // value must filter to empty, not raise (the reference binds
-      // filters as SQLite parameters, which never error)
-      req.category.map(v => col("category") === lit(v).try_cast("int")),
-      req.isPublic.map(v => col("is_public") === lit(v).try_cast("int")),
-      req.timestampDate.map(d => substring(col("timestamp"), 1, 10) === d)
-    ).flatten.foldLeft(index)(_ filter _)
-    val base = parsed match {
-      case None => filtered
-      case Some(node) =>
-        val a = arts.getOrElse {
-          val toks = graft.index.TextIndex.docTokens(index, req.tokenize)
-          TextArtifacts(toks, graft.index.TextIndex.postings(toks))
-        }
-        filtered.join(SearchEngine.matchSet(a, node), Seq("type", "key"))
-    }
+    val (base, _) = SearchEngine.filteredMatch(index, req, arts)
 
     // ONE job: count + all four facets via grouping sets, each facet
     // capped to `facetSize` values (count desc, value asc) INSIDE the
     // job — the driver collects ≤ 4·facetSize+1 rows, never one row per
     // distinct date (Datasette's facet_size contract).
-    base.createOrReplaceTempView("__facet_base")
-    val gsAll = spark.sql(
-      """SELECT type, category, is_public, substring(timestamp, 1, 10) AS ts_date,
-        |       grouping(type) AS g_t, grouping(category) AS g_c,
-        |       grouping(is_public) AS g_p, grouping(substring(timestamp, 1, 10)) AS g_d,
-        |       count(1) AS n
-        |FROM __facet_base
-        |GROUP BY GROUPING SETS ((type), (category), (is_public),
-        |                        (substring(timestamp, 1, 10)), ())""".stripMargin)
-    val facetVal = coalesce(col("type"), col("category").cast("string"),
-      col("is_public").cast("string"), col("ts_date"))
-    val gs = gsAll
+    val dims = Seq("type", "category", "is_public", "ts_date")
+    val gs = base.withColumn("ts_date", substring(col("timestamp"), 1, 10))
+      .groupingSets(dims.map(d => Seq(col(d))) :+ Seq.empty, dims.map(col): _*)
+      .agg(count(lit(1)).as("n"), dims.map(d => grouping(d).as(s"g_$d")): _*)
       .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("g_t"), col("g_c"), col("g_p"), col("g_d"))
-          .orderBy(col("n").desc, facetVal.asc_nulls_first)))
+        Window.partitionBy(dims.map(d => col(s"g_$d")): _*)
+          .orderBy(col("n").desc,
+            coalesce(dims.map(d => col(d).cast("string")): _*).asc_nulls_first)))
       .filter(col("__rk") <= facetSize)
       .collect()
 
-    val total = gs.find(r => r.getAs[Byte]("g_t") == 1 && r.getAs[Byte]("g_c") == 1 &&
-      r.getAs[Byte]("g_p") == 1 && r.getAs[Byte]("g_d") == 1)
+    def grouped(r: Row, dim: String): Boolean = r.getAs[Byte](s"g_$dim") == 0
+
+    val total = gs.find(r => dims.forall(!grouped(r, _)))
       .map(_.getAs[Long]("n")).getOrElse(0L)
 
     val categoryNames = Schema.categorySeed.toMap
 
-    def facetOf(name: String, param: String, valueOf: org.apache.spark.sql.Row => Option[String],
-        label: String => String, selectedVal: Option[String]): Facet = {
-      val vals = gs.flatMap { r =>
-        valueOf(r).map { v =>
+    def facet(name: String, dim: String, param: String, selectedVal: Option[String],
+        label: String => String = identity): Facet =
+      Facet(name, gs.toSeq.filter(grouped(_, dim)).flatMap { r =>
+        Option(r.getAs[Any](dim)).map(_.toString).map { v =>
           val selected = selectedVal.contains(v)
           FacetValue(v, label(v), r.getAs[Long]("n"),
             toggleUrl(req, q, param, v, selected), selected)
         }
-      }.sortBy(fv => (-fv.count, fv.value)).toSeq
-      Facet(name, vals)
-    }
-
-    def grouped(r: org.apache.spark.sql.Row, own: String): Boolean =
-      r.getAs[Byte](s"g_$own") == 0
+      }.sortBy(fv => (-fv.count, fv.value)))
 
     val facets = Seq(
-      facetOf("type", "type",
-        r => if (grouped(r, "t")) Option(r.getAs[String]("type")) else None,
-        identity, req.typeFilter),
-      facetOf("category", "category",
-        r => if (grouped(r, "c")) Option(r.getAs[Integer]("category")).map(_.toString) else None,
-        v => categoryNames.get(v.toInt).getOrElse(v), req.category),
-      facetOf("is_public", "is_public",
-        r => if (grouped(r, "p")) Option(r.getAs[Integer]("is_public")).map(_.toString) else None,
-        identity, req.isPublic),
-      facetOf("timestamp", "timestamp__date",
-        r => if (grouped(r, "d")) Option(r.getAs[String]("ts_date")) else None,
-        identity, req.timestampDate)
-    )
+      facet("type", "type", "type", req.typeFilter),
+      facet("category", "category", "category", req.category,
+        v => categoryNames.getOrElse(v.toInt, v)),
+      facet("is_public", "is_public", "is_public", req.isPublic),
+      facet("timestamp", "ts_date", "timestamp__date", req.timestampDate))
 
-    // batched enrichment: one join per type present in the page
+    // batched enrichment over the page's collected rows: one join per
+    // type present, against a local relation of ≤ page-size rows, so
+    // match, BM25 and top-k run once per page
     val resultRows = results.collect()
+    val pageRows = spark.createDataFrame(java.util.Arrays.asList(resultRows: _*), results.schema)
     val presentTypes = resultRows.map(_.getAs[String]("type")).distinct
     val enrichedByType: Map[String, Map[String, Map[String, String]]] =
       rules.filter(r => presentTypes.contains(r.typeTag) && r.displaySql.isDefined)
         .map { rule =>
-          val e = Enrich.enrichType(spark, rule, results, q)
+          val e = Enrich.enrichType(spark, rule, pageRows, q)
           rule.typeTag -> e.collect().map { row =>
             val displayCols = e.columns.filter(_.startsWith("display_"))
             row.getAs[String]("key") ->

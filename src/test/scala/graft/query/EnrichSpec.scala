@@ -13,19 +13,41 @@ class EnrichSpec extends AnyFunSuite {
 
   test("rewrite splits the documented `where <expr> = :key` shape") {
     val (body, key) = Enrich.rewrite(
-      "select * from emails where id = :key", "things")
+      "select * from emails where id = :key")
     assert(body == "select * from emails" && key == "id")
   }
 
-  test(":q is substituted as an escaped literal") {
-    val (body, _) = Enrich.rewrite(
-      "select :q as their_query from commits where sha = :key", "it's")
-    assert(body.contains("select 'it''s' as their_query from commits"))
+  test(":q is bound as a parameter on both paths, never spliced") {
+    RefFixtures.registerPlugin(spark)
+    val index = IndexJob.buildIndex(spark, RefFixtures.pluginRules)
+    val emailRule = RefFixtures.pluginRules.find(_.db == "emails.db").get
+    def enrich(displaySql: String, q: String) =
+      Enrich.enrichType(spark, emailRule.copy(displaySql = Some(displaySql)), index, q)
+        .collect()
+    val hostile = "\\' OR 1=1 --"
+    // fast path (trailing `<expr> = :key`) and LATERAL path (compound WHERE)
+    val echo = Seq(
+      "select id, subject, :q as their_query from emails where id = :key",
+      "select subject, :q as their_query from emails where 1 = 1 and id = :key")
+    for (sql <- echo; q <- Seq("it's", hostile)) {
+      val rows = enrich(sql, q)
+      assert(rows.length == 2 && rows.forall(_.getAs[String]("display_their_query") == q),
+        s"`$q` not echoed verbatim by: $sql")
+    }
+    // a predicate on :q: true for q = x, and the hostile q selects no row
+    val gated = Seq(
+      "select id, subject from (select * from emails where 'x' = :q) where id = :key",
+      "select subject from emails where 'x' = :q and id = :key")
+    for (sql <- gated) {
+      assert(enrich(sql, "x").forall(_.getAs[String]("display_subject") != null), sql)
+      assert(enrich(sql, hostile).forall(_.getAs[String]("display_subject") == null),
+        s"hostile q selected a detail row via: $sql")
+    }
   }
 
   test("undocumented shapes are rejected loudly") {
     intercept[IllegalArgumentException](
-      Enrich.rewrite("select * from emails", "q"))
+      Enrich.rewrite("select * from emails"))
   }
 
   test(":key in any predicate position runs via the LATERAL path") {
@@ -69,17 +91,17 @@ class EnrichSpec extends AnyFunSuite {
     // the lazy regex would capture keyExpr = "a = 1 and id" — a boolean,
     // so the join key would become "true"/"false" (VERDICT r2 #4)
     intercept[IllegalArgumentException](
-      Enrich.rewrite("select * from t where a = 1 and id = :key", "q"))
+      Enrich.rewrite("select * from t where a = 1 and id = :key"))
     intercept[IllegalArgumentException](
-      Enrich.rewrite("select * from t where a = 1 or id = :key", "q"))
+      Enrich.rewrite("select * from t where a = 1 or id = :key"))
     // AND/OR inside identifiers, strings, or parens are fine
     assert(Enrich.rewrite(
-      "select * from t where a_and_b = :key", "q")._2 == "a_and_b")
+      "select * from t where a_and_b = :key")._2 == "a_and_b")
     assert(Enrich.rewrite(
-      "select * from t where coalesce(a and b, c) = :key", "q")._2
+      "select * from t where coalesce(a and b, c) = :key")._2
       == "coalesce(a and b, c)")
     assert(Enrich.rewrite(
-      "select * from t where concat(x, ' and ') = :key", "q")._2
+      "select * from t where concat(x, ' and ') = :key")._2
       == "concat(x, ' and ')")
   }
 

@@ -2,6 +2,7 @@ package graft.serve
 
 import graft.{RefFixtures, TestSpark}
 import graft.index.IndexJob
+import graft.query.Enrich
 import graft.query.SearchEngine.Request
 import graft.text.Tokenize
 import org.scalatest.funsuite.AnyFunSuite
@@ -136,5 +137,48 @@ class SearchPageSpec extends AnyFunSuite {
     assert(oldest.otherSortOrders == Seq(
       SearchPage.SortLink("relevance", "?q=email"),
       SearchPage.SortLink("newest", "?q=email&sort=newest")))
+  }
+
+  test("assembly and enrichment leave the session catalog as they found it") {
+    RefFixtures.registerPlugin(spark)
+    val index = IndexJob.buildIndex(spark, RefFixtures.pluginRules).cache()
+    // a compound WHERE sends the emails rule down the LATERAL path
+    val rules = RefFixtures.pluginRules.map { r =>
+      if (r.db != "emails.db") r
+      else r.copy(displaySql = Some("select * from emails where 1 = 1 and id = :key"))
+    }
+    val lateralRule = rules.find(_.db == "emails.db").get
+    def catalog = spark.catalog.listTables().collect()
+      .map(t => (t.name, t.isTemporary)).sorted.toSeq
+    val before = catalog
+    for (i <- 1 to 10) {
+      val p = SearchPage.assemble(spark, index, rules,
+        Request(q = Some("things"), isPublic = Some((i % 2).toString), tokenize = Tokenize.Porter))
+      assert(p.results.forall(r => r("type") != "emails.db/emails" || r("display_subject") != null))
+      Enrich.enrichType(spark, lateralRule, index, s"q$i").collect()
+    }
+    assert(catalog == before)
+  }
+
+  test("concurrent assembles each equal the same request run serially") {
+    RefFixtures.registerPlugin(spark)
+    val index = IndexJob.buildIndex(spark, RefFixtures.pluginRules).cache()
+    val reqs = Seq(
+      Request(q = Some("things")),
+      Request(q = Some("things"), isPublic = Some("0")),
+      Request(q = Some("things"), isPublic = Some("1")),
+      Request(q = Some("things"), typeFilter = Some("emails.db/emails")),
+      Request(q = Some("things"), typeFilter = Some("github.db/commits")),
+      Request(q = Some("email"), sort = Some("oldest")),
+      Request(category = Some("1")),
+      Request(timestampDate = Some("2020-08-01")))
+    def page(r: Request) = SearchPage.assemble(spark, index, RefFixtures.pluginRules, r)
+    val serial = reqs.map(page)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(reqs.size)
+    val concurrent =
+      try reqs.map(r => pool.submit(() => page(r))).map(_.get())
+      finally pool.shutdown()
+    assert(serial.map(_.count).distinct.size > 1) // the filters select different rows
+    reqs.indices.foreach(i => assert(concurrent(i) == serial(i), s"request ${reqs(i)}"))
   }
 }
