@@ -28,8 +28,8 @@ object Cli {
   }
 
   /** The text artifacts an [[IndexCli]] run writes under `indexDir`.
-    * Positions are optional (older index dirs): phrases fall back to
-    * the candidate-verify path when they are absent.
+    * Positions are optional (index dirs written before they existed):
+    * when absent, phrase, `^` and NEAR derive them from `doc_tokens`.
     */
   def textArtifacts(spark: SparkSession, indexDir: String): TextArtifacts = {
     val positions = s"$indexDir/positions"

@@ -203,14 +203,9 @@ object Corpus {
 
   private def buildArtifacts(spark: SparkSession, sfDir: String,
       mode: Tokenize.Value): SearchEngine.TextArtifacts = {
-    val toks = TextIndex.docTokens(searchIndex(spark, sfDir), mode).persist()
-    // single-pass build (r7): positions are the one exploded+shuffled
-    // relation; the tf postings roll up from them IN-PARTITION (term
-    // clustering satisfies the grouping — no second explode/exchange)
-    val pos = byTerm(TextIndex.positions(toks))
-    SearchEngine.TextArtifacts(toks,
-      TextIndex.postingsFromPositions(pos)
-        .sortWithinPartitions("term").persist(), Some(pos))
+    val arts = SearchEngine.TextArtifacts.build(
+      TextIndex.docTokens(searchIndex(spark, sfDir), mode).persist(), byTerm)
+    arts.copy(postings = byTerm(arts.postings))
   }
 
   /** Porter artifacts DERIVED from the default-tokenizer artifacts when
@@ -235,9 +230,7 @@ object Corpus {
       val base = textArtifacts(spark, sfDir, Tokenize.None_)
       val toks = TextIndex.stemTokens(base.docTokens).persist()
       val pos = byTerm(TextIndex.stemPositions(base.positions.get))
-      SearchEngine.TextArtifacts(toks,
-        TextIndex.postingsFromPositions(pos)
-          .sortWithinPartitions("term").persist(), Some(pos))
+      SearchEngine.TextArtifacts(toks, byTerm(TextIndex.postingsFromPositions(pos)), Some(pos))
     }
   }
 

@@ -84,6 +84,9 @@ private[graft] object ExtShared {
         .minhash_sigs_e(org.apache.spark.sql.functions.col("__arr"), K)
       docShingleArrs(spark, sfDir)
         .select(col("doc_id"), mh.as("__mh"))
+        // an empty shingle array yields a null signature: drop the row,
+        // as the relational aggregate did
+        .filter(col("__mh").isNotNull)
         .select(col("doc_id") +:
           (0 until K).map(i => col("__mh")(i).as(s"mh_$i")): _*)
         .persist()

@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Config
 import graft.index.{IndexJob, TextIndex}
+import graft.query.SearchEngine.TextArtifacts
 import graft.text.Tokenize
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
@@ -17,8 +18,9 @@ import java.nio.file.{Files, Paths}
   *   --source <view>=<parquetPath> ... [--tokenize porter|none] [-d db]...
   * }}}
   * `<indexDir>` receives `search_index/` (parquet, partitioned by type,
-  * REPLACE-merged into any existing index), `doc_tokens/` and
-  * `postings/` — the reference's beta.db + FTS tables as a directory.
+  * REPLACE-merged into any existing index), `doc_tokens/`, `postings/`
+  * and `positions/` — the reference's beta.db + FTS tables as a
+  * directory.
   */
 object IndexCli {
 
@@ -38,21 +40,21 @@ object IndexCli {
     val rules = Config.parseMetadata(
       Files.readString(Paths.get(configPath)))
     val batch = IndexJob.extractAll(spark, rules, databases)
-    IndexJob.replaceInto(spark, s"$indexDir/search_index", IndexJob.dedupe(batch))
+    IndexJob.replaceInto(spark, s"$indexDir/search_index", batch)
     // FTS artifacts are full-rebuild outputs of the doc table
     // (reference utils.py:57-65: rebuild + optimize after every run)
     val index = spark.read.parquet(s"$indexDir/search_index")
     val toks = TextIndex.docTokens(index, tokenize)
     toks.write.mode("overwrite").parquet(s"$indexDir/doc_tokens")
-    val persistedToks = spark.read.parquet(s"$indexDir/doc_tokens")
+    // positions are built once and persisted for the run: the postings
+    // write rolls them up, the positions write reads them back
+    val arts = TextArtifacts.build(spark.read.parquet(s"$indexDir/doc_tokens"), _.persist())
     // both term-keyed artifacts land in the term-bucket-PARTITIONED
     // layout: a query's terms become a static partition IN-filter
     // (SearchEngine.termPrune), so searches read only their buckets
-    TextIndex.writeTermPartitioned(
-      TextIndex.postings(persistedToks), s"$indexDir/postings")
-    // positional postings: makes phrase queries fully indexed
-    TextIndex.writeTermPartitioned(
-      TextIndex.positions(persistedToks), s"$indexDir/positions")
+    TextIndex.writeTermPartitioned(arts.postings, s"$indexDir/postings")
+    TextIndex.writeTermPartitioned(arts.positions.get, s"$indexDir/positions")
+    arts.positions.get.unpersist(blocking = true)
     println(s"indexed ${index.count()} documents into $indexDir " +
       s"(tokenize=$tokenize${databases.fold("")(d => s", databases=${d.mkString(",")}")})")
   }

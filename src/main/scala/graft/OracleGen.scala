@@ -71,7 +71,7 @@ object OracleGen {
     * between", i.e. "∃ per-phrase instances with max(start) − min(end)
     * ≤ n + 1" (take m = the minimum chosen end; boundary pinned
     * against SQLite FTS5); mirrors FtsQuery.matches and
-    * SearchEngine.matchCondition exactly.
+    * SearchEngine.nearViaPositions exactly.
     */
   private def nearSql(f: String, ps: Seq[Seq[String]], n: Int): String = {
     val ends = ps

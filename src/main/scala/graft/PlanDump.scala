@@ -73,8 +73,7 @@ object PlanDump {
     // 8. term-partitioned postings: a query's terms must appear as a
     //    static PartitionFilters IN on tb (the term-bucket column)
     val postDir = "target/plandump/postings"
-    graft.index.TextIndex.writeTermPartitioned(
-      graft.index.TextIndex.postings(arts.docTokens), postDir)
+    graft.index.TextIndex.writeTermPartitioned(arts.postings, postDir)
     val partArts = SearchEngine.TextArtifacts(
       arts.docTokens, spark.read.parquet(postDir), arts.positions)
     dump("p4 match on term-partitioned postings")(

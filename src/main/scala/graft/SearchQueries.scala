@@ -239,7 +239,7 @@ object SearchQueries {
     QueryDef("a2_facet_matched",
       (spark, sfDir) => {
         val arts = Corpus.textArtifacts(spark, sfDir, Tokenize.None_)
-        val matched = SearchEngine.matchedViaPostings(arts.postings, Seq("urgent"))
+        val matched = SearchEngine.matchSet(arts, FtsQuery.Term("urgent"))
         matched.join(Corpus.searchIndex(spark, sfDir), Seq("type", "key"))
           .groupBy("category").agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("category"))

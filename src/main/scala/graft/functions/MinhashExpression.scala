@@ -112,7 +112,7 @@ case class MinhashSigs(child: Expression, k: Int) extends UnaryExpression {
 
 object MinhashFunctions {
 
-  private def litK(e: Expression): Int = e.eval(null) match {
+  private def litK(e: Expression): Int = (if (e.foldable) e.eval(null) else e) match {
     case i: Int => i
     case l: Long => l.toInt
     case other => throw new IllegalArgumentException(

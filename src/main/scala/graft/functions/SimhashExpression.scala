@@ -130,7 +130,7 @@ case class SimhashSig(child: Expression, bits: Int) extends UnaryExpression {
 
 object SimhashFunctions {
 
-  private def litBits(e: Expression): Int = e.eval(null) match {
+  private def litBits(e: Expression): Int = (if (e.foldable) e.eval(null) else e) match {
     case i: Int => i
     case l: Long => l.toInt
     case other => throw new IllegalArgumentException(

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.core.{IndexRule, Schema}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * cardinality), [[replaceInto]] uses dynamic partition overwrite so a
   * re-index of one source type rewrites only that type's partitions and
   * reads nothing else (partition pruning on the existing side). The
-  * within-batch dedup is a single window over the same (type, key)
-  * partitioning, so Catalyst reuses one shuffle for dedup + merge.
+  * within-batch dedup and the merge are one window over the union of
+  * both sides on (type, key): one shuffle, one `row_number`.
   */
 object IndexJob {
 
@@ -69,27 +69,39 @@ object IndexJob {
     * deletes the earlier row (reference utils.py:50-54, SURVEY §1.4).
     * Deterministic tie-break: highest batch_ord, then column values.
     */
-  def dedupe(batch: DataFrame): DataFrame = {
-    val ord =
-      if (batch.columns.contains("batch_ord")) col("batch_ord").desc
-      else lit(0).asc
-    val w = Window.partitionBy(col("type"), col("key"))
-      .orderBy(ord, col("timestamp").desc_nulls_last, col("title").asc_nulls_last,
-        col("search_1").asc_nulls_last)
+  def dedupe(batch: DataFrame): DataFrame =
     batch
-      .withColumn("__rn", row_number().over(w))
+      .withColumn("__rn", row_number().over(lastWriterFirst(batch)))
       .filter(col("__rn") === 1)
       .drop("__rn", "batch_ord")
+
+  /** The (type, key) window ordered so the surviving row comes first. */
+  private def lastWriterFirst(df: DataFrame, before: Column*) = {
+    val ord =
+      if (df.columns.contains("batch_ord")) col("batch_ord").desc
+      else lit(0).asc
+    Window.partitionBy(col("type"), col("key"))
+      .orderBy(before ++ Seq(ord, col("timestamp").desc_nulls_last,
+        col("title").asc_nulls_last, col("search_1").asc_nulls_last): _*)
   }
 
-  /** REPLACE-merge: incoming rows win on (type, key); existing rows with
-    * no incoming match survive (the reference never deletes —
-    * SURVEY §1.4). Both inputs must be conformed.
+  /** REPLACE-merge: incoming rows win on (type, key), last writer first
+    * as in [[dedupe]]; existing rows with no incoming match survive (the
+    * reference never deletes — SURVEY §1.4). Both inputs must be
+    * conformed; `incoming` need not be deduped. One window over the
+    * union of both sides does the dedupe and the match: incoming rows
+    * sort first in each (type, key), so the first row tells whether the
+    * key has an incoming row.
     */
   def merge(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val inc = dedupe(incoming)
-    inc.unionByName(
-      existing.join(inc.select("type", "key"), Seq("type", "key"), "left_anti"))
+    val both = incoming.withColumn("__inc", lit(1))
+      .unionByName(existing.withColumn("__inc", lit(0)), allowMissingColumns = true)
+    val w = lastWriterFirst(both, col("__inc").desc)
+    both
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("__key_inc", first(col("__inc")).over(w))
+      .filter((col("__inc") === 1 && col("__rn") === 1) || col("__key_inc") === 0)
+      .drop("__rn", "__key_inc", "__inc", "batch_ord")
   }
 
   /** Full batch build: extract + dedup. The common entry for tests and
@@ -103,15 +115,16 @@ object IndexJob {
     * dynamic partition overwrite — only partitions present in `incoming`
     * are rewritten; untouched types are not even read. This is the
     * 100 TB equivalent of `REPLACE INTO`: cost proportional to the data
-    * being re-indexed, not to the index size.
+    * being re-indexed, not to the index size. `incoming` is the raw
+    * [[extractAll]] batch: its one dedupe runs here (in [[merge]] on a
+    * refresh).
     */
   def replaceInto(spark: SparkSession, indexPath: String,
       incoming: DataFrame): Unit = {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val merged: DataFrame =
       if (pathExists(spark, indexPath)) {
-        val touched = dedupe(incoming)
-        val types = touched.select("type").distinct() // small: one row per rule
+        val types = incoming.select("type").distinct() // small: one row per rule
           .collect().map(_.getString(0)).toSeq
         val existing = spark.read.parquet(indexPath)
           .filter(col("type").isin(types: _*)) // partition-pruned scan
@@ -120,7 +133,7 @@ object IndexJob {
         // (Production: write to a staging dir + atomic swap, or a table
         // format with snapshot isolation; localCheckpoint is the local
         // equivalent.)
-        merge(existing, touched).localCheckpoint(true)
+        merge(existing, incoming).localCheckpoint(true)
       } else dedupe(incoming)
     merged
       .repartition(col("type"))

@@ -11,18 +11,22 @@ import org.apache.spark.sql.functions._
   * Indexed fields: `title` and `search_1` ONLY (utils.py:90; `search_2`
   * / `search_3` are declared but never indexed — SURVEY §1.2).
   *
-  * Three artifacts (all derivable in one pass over the doc table):
+  * Artifacts, built in one pass over the doc table by
+  * [[graft.query.SearchEngine.TextArtifacts.build]] (token arrays →
+  * [[positions]] → [[postingsFromPositions]]):
   *
   *  - '''docTokens''' (type, key, timestamp, tokens_title, tokens_s1,
-  *    dl_title, dl_s1): per-document token arrays — serves phrase
-  *    verification and doc lengths.
+  *    dl_title, dl_s1): per-document token arrays — the source of the
+  *    other artifacts and of BM25's doc lengths.
+  *  - '''positions''' (term, type, key, field, poss): positional
+  *    postings — phrase, `^` and NEAR resolve on them.
   *  - '''postings''' (term, type, key, tf_title, tf_s1): the inverted
   *    index. At 100 TB this is written bucketed/partitioned BY TERM so a
   *    query's handful of terms prunes to a few buckets instead of
   *    scanning the corpus; the tiny query-term list is broadcast.
   *  - '''stats''' (n_docs, avgdl — the combined-row |D| mean): BM25
-  *    constants (a 1-row DataFrame; df per term lives on postings via a
-  *    window-free groupBy).
+  *    constants (a 1-row DataFrame; df per term is a window over the
+  *    query's term-pruned postings rows, SearchEngine.bm25Scores).
   */
 object TextIndex {
 
@@ -36,23 +40,6 @@ object TextIndex {
       Tokenizer.tokens(col("search_1"), mode).as("tokens_s1"))
       .withColumn("dl_title", size(col("tokens_title")))
       .withColumn("dl_s1", size(col("tokens_s1")))
-
-  /** Inverted postings with per-field term frequencies. ONE explode
-    * (field-tagged token structs) + ONE shuffle on (term, type, key);
-    * map-side partial aggregation keeps the explode from inflating the
-    * exchange. (A per-field union would double the shuffle volume.)
-    */
-  def postings(docTokens: DataFrame): DataFrame =
-    docTokens
-      .select(col("type"), col("key"),
-        explode(concat(
-          transform(col("tokens_title"), t => struct(t.as("t"), lit(0).as("f"))),
-          transform(col("tokens_s1"), t => struct(t.as("t"), lit(1).as("f")))
-        )).as("tok"))
-      .groupBy(col("tok.t").as("term"), col("type"), col("key"))
-      .agg(
-        sum(when(col("tok.f") === 0, 1.0).otherwise(0.0)).as("tf_title"),
-        sum(when(col("tok.f") === 1, 1.0).otherwise(0.0)).as("tf_s1"))
 
   /** Positional postings (term, type, key, field, poss) — the FTS5-style
     * position lists that make PHRASE queries fully indexed: ONE row per
@@ -94,7 +81,8 @@ object TextIndex {
     * exchange — HashPartitioning(term) satisfies the grouping's
     * clustered distribution — so building both artifacts costs ONE
     * tokenize + explode + term shuffle instead of two (r7: halves
-    * text_index_build). Output schema identical to [[postings]].
+    * text_index_build). Output schema (term, type, key, tf_title,
+    * tf_s1): one row per (term, doc), per-field term frequencies.
     */
   def postingsFromPositions(positions: DataFrame): DataFrame =
     positions
@@ -152,12 +140,6 @@ object TextIndex {
       .repartition(col("term"))
       .groupBy("term", "type", "key", "field")
       .agg(sort_array(flatten(collect_list(col("poss")))).as("poss"))
-
-  /** Per-term document frequency (docs containing the term in either
-    * indexed field).
-    */
-  def docFreq(postings: DataFrame): DataFrame =
-    postings.groupBy("term").agg(count(lit(1)).as("df"))
 
   /** 1-row corpus stats for BM25. */
   def stats(docTokens: DataFrame): DataFrame =

@@ -11,13 +11,13 @@ import org.apache.spark.sql.functions._
   * templates + FTS5 MATCH (reference dogsheep_beta/__init__.py:8-43).
   *
   * Execution shape (scale-first):
-  *  1. Boolean match resolves in the POSTINGS INDEX: terms and OR/AND/
-  *     NOT trees over them are isin-pruned scans + joins, `prefix*` is a
-  *     term-range prune (postings are sorted/bucketed by term), FTS5
-  *     column filters ride the per-field tfs ([[exactViaPostings]]).
-  *     Only multi-token phrases touch token arrays, and then only on a
-  *     postings-derived candidate superset ([[candidateViaPostings]]) —
-  *     there is no full docTokens scan on any path.
+  *  1. Boolean match resolves in the INDEX ([[exactViaPostings]]):
+  *     terms and OR/AND/NOT trees over them are isin-pruned scans +
+  *     joins, `prefix*` is a term-range prune (postings are
+  *     sorted/bucketed by term), FTS5 column filters ride the per-field
+  *     tfs, and phrases, `^` and NEAR are doc-level joins of
+  *     term-pruned positional postings. Token arrays are read only to
+  *     derive positions for an index written before they existed.
   *  2. BM25 scores come from the postings ⋈ (tiny, broadcast) query-term
   *     list, aggregated per doc — one shuffle on (type, key).
   *  3. Filters (`type`/`category`/`is_public`/date) are plain pushed-down
@@ -60,68 +60,6 @@ object SearchEngine {
       rawMode: Boolean = false
   )
 
-  /** Boolean match predicate over docTokens' token arrays.
-    * `fields` restricts which indexed fields the leaf predicates see
-    * (the FTS5 column-filter contract).
-    */
-  def matchCondition(n: Node,
-      fields: Seq[String] = Seq("tokens_title", "tokens_s1")): Column = n match {
-    case Term(t)   => fields.map(f => array_contains(col(f), t)).reduce(_ || _)
-    case Prefix(p) => fields.map(f => exists(col(f), t => t.startsWith(p))).reduce(_ || _)
-    case Phrase(ts) if ts.exists(_.endsWith("*")) =>
-      // phrase-prefix ("a b"*): positional scan with a starts-with
-      // last leg — the instr fast path below can't express it
-      fields.map(f => size(phraseStartsCol(f, ts)) > 0).reduce(_ || _)
-    case Phrase(ts) =>
-      val needle = lit(" " + ts.mkString(" ") + " ")
-      def inField(f: String) = instr(
-        concat(lit(" "), concat_ws(" ", col(f)), lit(" ")), needle) > 0
-      fields.map(inField).reduce(_ || _)
-    case And(ns)      => ns.map(matchCondition(_, fields)).reduce(_ && _)
-    case Or(ns)       => ns.map(matchCondition(_, fields)).reduce(_ || _)
-    case Not(pos, ng) => matchCondition(pos, fields) && !matchCondition(ng, fields)
-    case Field(f, m) =>
-      matchCondition(m, Seq(if (f == "title") "tokens_title" else "tokens_s1"))
-    case First(ts) =>
-      fields.map(f => array_contains(phraseStartsCol(f, ts), 0)).reduce(_ || _)
-    case Near(ps, n) => fields.map(nearCondition(_, ps, n)).reduce(_ || _)
-  }
-
-  /** 0-based start positions of a phrase within one token-array column
-    * (codegen'd higher-order functions — no UDF). Guarded so the
-    * sequence never runs descending when the array is shorter than the
-    * phrase. An anchor token with a trailing `*` is a starts-with match
-    * (prefix anchors in NEAR / `^`).
-    */
-  private def phraseStartsCol(f: String, ts: Seq[String]): Column = {
-    val k = ts.size
-    def tokCond(t: String, e: Column): Column =
-      if (t.endsWith("*")) e.startsWith(t.dropRight(1)) else e === t
-    when(size(col(f)) >= k,
-      filter(sequence(lit(0), size(col(f)) - lit(k)), i =>
-        ts.zipWithIndex.map { case (t, j) =>
-          tokCond(t, element_at(col(f), (i + lit(j + 1)).cast("int")))
-        }.reduce(_ && _)))
-      .otherwise(array().cast("array<int>"))
-  }
-
-  /** NEAR over one field: ∃ anchor end m (of any phrase instance) with
-    * every phrase having an instance of end ≥ m and start ≤ m + n + 1 —
-    * the polynomial form of FTS5's "≤ n tokens between", i.e.
-    * "∃ instances with max(start) − min(end) ≤ n + 1" (take m = the
-    * minimum chosen end; boundary pinned against SQLite FTS5). Same
-    * shape as OracleGen.nearSql and FtsQuery.matches.
-    */
-  private def nearCondition(f: String, ps: Seq[Seq[String]], n: Int): Column = {
-    val ends = ps
-      .map(ts => transform(phraseStartsCol(f, ts), s => s + lit(ts.size - 1)))
-      .reduce(concat(_, _))
-    exists(ends, m => ps.map(ts =>
-      exists(phraseStartsCol(f, ts), a =>
-        a + lit(ts.size - 1) >= m && a <= m + lit(n + 1))
-    ).reduce(_ && _))
-  }
-
   /** Prune a term-keyed relation (tf postings or positional postings)
     * to `terms`: the `isin` on `term` plus — when the relation carries
     * the on-disk term-bucket partition column `tb`
@@ -139,19 +77,6 @@ object SearchEngine {
       base.filter(col("tb").isin(
         t.map(TextIndex.termBucket(_)).distinct: _*))
     else base
-  }
-
-  /** Scale path for selective conjunctive terms: semi-join docs against
-    * term-pruned postings instead of scanning every token array. Used
-    * when the match tree is a plain AND of terms.
-    */
-  def matchedViaPostings(postings: DataFrame, terms: Seq[String]): DataFrame = {
-    val n = terms.distinct.size
-    termPrune(postings, terms) // partition/bucket prune by term
-      .groupBy("type", "key")
-      .agg(count(lit(1)).as("__hits"))
-      .filter(col("__hits") === n)
-      .select("type", "key")
   }
 
   /** Restrict postings rows to hits in one indexed field (the FTS5
@@ -233,7 +158,9 @@ object SearchEngine {
     */
   private def phraseOccurrences(arts: TextArtifacts, ts: Seq[String],
       field: Option[String]): DataFrame = {
-    val all = arts.positions.get
+    // an index directory written before positions existed: derive
+    // them with the build recipe's own step
+    val all = arts.positions.getOrElse(TextIndex.positions(arts.docTokens))
     graft.functions.IntersectFunctions.register(all.sparkSession)
     val pos = field match {
       case Some("title") => all.filter(col("field") === 0)
@@ -276,9 +203,9 @@ object SearchEngine {
   /** Indexed NEAR: join each phrase's start-set row on (doc, field) and
     * keep docs where some instance combination has max(start) −
     * min(end) ≤ n + 1 (the FTS5 rule) — evaluated IN-ROW over the
-    * position arrays in the same ∃-anchor form as the token-array
-    * [[nearCondition]] (equivalent: take m = the minimum chosen end;
-    * pinned against SQLite FTS5). Per-doc work is bounded by
+    * position arrays in the same ∃-anchor form as
+    * [[graft.text.FtsQuery.matches]] (equivalent: take m = the minimum
+    * chosen end; pinned against SQLite FTS5). Per-doc work is bounded by
     * per-document phrase frequency, never corpus size, and the
     * (doc, field) join is 1:1 (one start-set row per phrase per
     * doc-field).
@@ -305,134 +232,46 @@ object SearchEngine {
     joined.filter(cond).select("type", "key").distinct()
   }
 
-  /** Fully-indexed resolution of a match tree: `Some(matchSet)` when
-    * every leaf resolves in the postings index — terms, prefixes
-    * (term-range), field filters, and arbitrary AND/OR/NOT over them.
-    * `None` when the tree needs token positions (multi-token phrases).
-    * AND = semi-join chain (all-terms conjunctions collapse to one
-    * aggregation), OR = union+distinct of per-branch posting sets,
-    * NOT = anti-join. No docTokens scan anywhere.
+  /** Indexed resolution of a match tree as (type, key) rows. Terms,
+    * prefixes (term-range) and field filters resolve in the tf
+    * postings; phrases, `^` and NEAR in the positional postings. AND =
+    * semi-join chain (all-terms conjunctions collapse to one
+    * aggregation), OR = union+distinct of per-branch sets, NOT =
+    * anti-join.
     */
   private[graft] def exactViaPostings(arts: TextArtifacts, n: Node,
-      field: Option[String] = None): Option[DataFrame] = n match {
-    case _ if asTerm(n).isDefined => Some(termsAllOf(arts, Seq(asTerm(n).get), field))
-    case Phrase(ts) if arts.positions.isDefined =>
-      Some(phraseViaPositions(arts, ts, field))
-    case Phrase(_)  => None
-    case First(ts) if arts.positions.isDefined =>
-      Some(firstViaPositions(arts, ts, field))
-    case First(_)   => None
-    case Near(ps, k) if arts.positions.isDefined =>
-      Some(nearViaPositions(arts, ps, k, field))
-    case Near(_, _) => None
-    case Prefix(p)  => Some(prefixSet(arts, p, field))
+      field: Option[String] = None): DataFrame = n match {
+    case Term(t)     => termsAllOf(arts, Seq(t), field)
+    case Phrase(ts) if asTerm(n).isDefined => termsAllOf(arts, ts, field)
+    case Phrase(ts)  => phraseViaPositions(arts, ts, field)
+    case First(ts)   => firstViaPositions(arts, ts, field)
+    case Near(ps, k) => nearViaPositions(arts, ps, k, field)
+    case Prefix(p)   => prefixSet(arts, p, field)
     case Field(f, m) => exactViaPostings(arts, m, Some(if (f == "title") "title" else "s1"))
     case And(ns) =>
       val (termBranches, rest) = ns.partition(asTerm(_).isDefined)
       val termSet =
         if (termBranches.isEmpty) None
         else Some(termsAllOf(arts, termBranches.flatMap(asTerm), field))
-      val restSets = rest.map(exactViaPostings(arts, _, field))
-      if (restSets.exists(_.isEmpty)) None
-      else Some((termSet.toSeq ++ restSets.flatten)
-        .reduce((a, b) => a.join(b, Seq("type", "key"), "left_semi")))
+      (termSet.toSeq ++ rest.map(exactViaPostings(arts, _, field)))
+        .reduce((a, b) => a.join(b, Seq("type", "key"), "left_semi"))
     case Or(ns) =>
       val (termBranches, rest) = ns.partition(asTerm(_).isDefined)
       val termSet =
         if (termBranches.isEmpty) None
         else Some(termsAnyOf(arts, termBranches.flatMap(asTerm), field))
-      val restSets = rest.map(exactViaPostings(arts, _, field))
-      if (restSets.exists(_.isEmpty)) None
-      else Some((termSet.toSeq ++ restSets.flatten)
-        .reduce(_ unionByName _).distinct())
-    case Not(pos, neg) =>
-      for {
-        p <- exactViaPostings(arts, pos, field)
-        ng <- exactViaPostings(arts, neg, field)
-      } yield p.join(ng, Seq("type", "key"), "left_anti")
-  }
-
-  /** A postings-derived SUPERSET of the match set, for trees the index
-    * can't resolve exactly (multi-token phrases): a phrase's docs must
-    * contain all its terms; NOT's matches ⊆ its positive side; AND
-    * intersects, OR unions. Always defined — every leaf has a postings
-    * superset — so the exact token-array predicate only ever runs on
-    * candidates, never the corpus.
-    */
-  /** Candidate docs for one anchor (phrase token list, possibly with
-    * starred prefix tokens): all exact terms present AND every starred
-    * prefix matched via a term-range set. Always a superset of the
-    * anchor's true occurrences.
-    */
-  private def anchorCandidates(arts: TextArtifacts, ts: Seq[String],
-      field: Option[String]): DataFrame = {
-    val exact = ts.filterNot(_.endsWith("*"))
-    val sets =
-      (if (exact.nonEmpty) Seq(termsAllOf(arts, exact, field)) else Seq.empty) ++
-        ts.filter(_.endsWith("*"))
-          .map(p => prefixSet(arts, p.dropRight(1), field))
-    sets.reduce((a, b) => a.join(b, Seq("type", "key"), "left_semi"))
-  }
-
-  private[graft] def candidateViaPostings(arts: TextArtifacts, n: Node,
-      field: Option[String] = None): DataFrame = n match {
-    case Phrase(ts)   => anchorCandidates(arts, ts, field)
-    case First(ts)    => anchorCandidates(arts, ts, field)
-    case Near(ps, _)  =>
-      ps.map(anchorCandidates(arts, _, field))
-        .reduce((a, b) => a.join(b, Seq("type", "key"), "left_semi"))
-    case Not(pos, _)  => candidateViaPostings(arts, pos, field)
-    case Field(f, m)  => candidateViaPostings(arts, m, Some(if (f == "title") "title" else "s1"))
-    case And(ns) =>
-      ns.map(candidateViaPostings(arts, _, field))
-        .reduce((a, b) => a.join(b, Seq("type", "key"), "left_semi"))
-    case Or(ns) =>
-      ns.map(candidateViaPostings(arts, _, field))
+      (termSet.toSeq ++ rest.map(exactViaPostings(arts, _, field)))
         .reduce(_ unionByName _).distinct()
-    case other =>
-      exactViaPostings(arts, other, field)
-        .getOrElse(sys.error(s"unreachable: $other has no postings superset"))
+    case Not(pos, neg) =>
+      exactViaPostings(arts, pos, field)
+        .join(exactViaPostings(arts, neg, field), Seq("type", "key"), "left_anti")
   }
 
-  /** The boolean match set for a parsed query, as (type, key) rows.
-    *
-    * Every tree resolves in the index when artifacts are complete:
-    * terms, prefixes, field filters, and any AND/OR/NOT combination via
-    * the tf postings (term/isin/range-pruned scans + joins), and
-    * multi-token phrases via positional-postings adjacency joins. When
-    * the positions artifact is absent, phrases fall back to the exact
-    * token-array predicate over a postings candidate superset. There is
-    * no full docTokens scan on any path.
+  /** The boolean match set for a parsed query, as (type, key) rows,
+    * resolved in the index ([[exactViaPostings]]).
     */
   def matchSet(arts: TextArtifacts, node: Node): DataFrame =
-    exactViaPostings(arts, node) match {
-      case Some(df) => df
-      case None =>
-        arts.docTokens
-          .join(candidateViaPostings(arts, node), Seq("type", "key"), "left_semi")
-          .filter(matchCondition(node))
-          .select("type", "key")
-    }
-
-  /** Terms that are NECESSARY for a match (conservative): every matched
-    * doc must contain all of them. Empty for trees whose necessity set
-    * can't be derived cheaply (pure OR branches, prefix-only).
-    * Used to prefilter general trees through the postings index before
-    * the exact token-array check runs on the (much smaller) candidate
-    * set.
-    */
-  def requiredTerms(n: Node): Seq[String] = n match {
-    case Term(t)     => Seq(t)
-    case Phrase(ts)  => ts.filterNot(_.endsWith("*")) // phrase-prefix last leg
-    case Prefix(_)   => Seq.empty
-    case And(ns)     => ns.flatMap(requiredTerms).distinct
-    case Or(_)       => Seq.empty // a term is only necessary if in EVERY branch; skip
-    case Not(pos, _) => requiredTerms(pos)
-    case Field(_, m) => requiredTerms(m) // field-restricted ⊆ either-field match
-    case Near(ps, _) => // every phrase must appear; starred = not isin-able
-      ps.flatten.filterNot(_.endsWith("*")).distinct
-    case First(ts)   => ts.filterNot(_.endsWith("*"))
-  }
+    exactViaPostings(arts, node)
 
   /** BM25 per-doc scores for the query's positive terms.
     * postings ⋈ broadcast(terms) ⋈ broadcast(df) — one narrow shuffle.
@@ -491,12 +330,29 @@ object SearchEngine {
   /** Precomputed text-index artifacts (see [[graft.index.TextIndex]]);
     * pass the memoized/persisted ones so repeated queries share one
     * tokenization + postings build (the reference equivalent: the FTS
-    * table persists between requests). `positions` (optional) holds the
-    * positional postings that make phrase queries fully indexed; when
-    * absent, phrases verify on a postings candidate superset instead.
+    * table persists between requests). Build them with
+    * [[TextArtifacts.build]]. `positions` is `None` only for an index
+    * directory written before positions existed; phrase, `^` and NEAR
+    * then derive them from `docTokens` per query.
     */
   final case class TextArtifacts(docTokens: DataFrame, postings: DataFrame,
       positions: Option[DataFrame] = None)
+
+  object TextArtifacts {
+
+    /** The one text-index recipe: token arrays → positional postings
+      * ([[TextIndex.positions]], the one explode + term shuffle) → tf
+      * postings rolled up from them ([[TextIndex.postingsFromPositions]],
+      * no second exchange). `keep` is applied to the positions before
+      * the rollup reads them — a persist shares them between the two
+      * artifacts' consumers.
+      */
+    def build(docTokens: DataFrame,
+        keep: DataFrame => DataFrame = identity): TextArtifacts = {
+      val positions = keep(TextIndex.positions(docTokens))
+      TextArtifacts(docTokens, TextIndex.postingsFromPositions(positions), Some(positions))
+    }
+  }
 
   /** The rows a request selects before ranking: the index under the
     * request's filters (`type`/`category`/`is_public`/date) and, when
@@ -525,10 +381,8 @@ object SearchEngine {
     req.q.flatMap(FtsQuery.parseRequest(_, req.tokenize, req.rawMode)) match {
       case None => (filtered, None)
       case Some(node) =>
-        val arts = artifacts.getOrElse {
-          val toks = TextIndex.docTokens(index, req.tokenize)
-          TextArtifacts(toks, TextIndex.postings(toks))
-        }
+        val arts = artifacts.getOrElse(
+          TextArtifacts.build(TextIndex.docTokens(index, req.tokenize)))
         (filtered.join(matchSet(arts, node), Seq("type", "key")), Some(node -> arts))
     }
   }

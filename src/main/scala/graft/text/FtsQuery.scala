@@ -142,7 +142,8 @@ object FtsQuery {
   /** Direct evaluation of a match tree against one document's token
     * arrays — the expression-level MATCH used by
     * [[graft.functions.FtsMatch]] (brute-force score-scan semantics;
-    * the indexed path lives in SearchEngine.matchSet).
+    * it is also the reference the indexed SearchEngine.matchSet is
+    * tested against).
     */
   def matches(n: Node, title: IndexedSeq[String], s1: IndexedSeq[String]): Boolean = {
     // 0-based start positions of a phrase in one field's token array;
@@ -378,7 +379,8 @@ object FtsQuery {
     /** A phrase anchor (the operand of `^` and the members of NEAR):
       * a bareword, quoted phrase, or bare prefix (`urg*`), tokenized.
       * A prefix anchor encodes as a single starred token (`"urg*"`) —
-      * the evaluators ([[matches]], SearchEngine, OracleGen) treat a
+      * the evaluators ([[matches]], SearchEngine's positional legs,
+      * OracleGen) treat a
       * trailing `*` on an anchor token as a starts-with match. Like
       * [[Prefix]], prefix anchors fold but are NOT stemmed.
       */

@@ -356,7 +356,8 @@ class ExtSpec extends AnyFunSuite {
         docs.selectExpr("cast(doc_id as string) as key", "text as search_1",
           "'t' as title").selectExpr("*", "'b/t' as type")),
       Tokenize.None_)
-    TextIndex.writePostingsBucketed(TextIndex.postings(toks), "postings_bucketed", 4)
+    TextIndex.writePostingsBucketed(
+      graft.query.SearchEngine.TextArtifacts.build(toks).postings, "postings_bucketed", 4)
     val t = spark.table("postings_bucketed")
     assert(t.filter(col("term") === "fox").count() == 4) // docs 1,2,3,5
     // bucketed table: scan for one term reads without exchange for

@@ -311,6 +311,19 @@ class FunctionsSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(1L, 2L))
   }
 
+  test("minhash_sigs_e/simhash_e: a column k or bits gets the literal error") {
+    graft.functions.MinhashFunctions.register(extSpark)
+    graft.functions.SimhashFunctions.register(extSpark)
+    import extSpark.implicits._
+    val df = Seq((Seq(1L, 2L), "a b c", 4)).toDF("h", "s", "n")
+    val mh = intercept[IllegalArgumentException](
+      df.selectExpr("minhash_sigs_e(h, n)").collect())
+    assert(mh.getMessage.startsWith("minhash_sigs_e: k must be an integer literal"), mh.getMessage)
+    val sh = intercept[IllegalArgumentException](
+      df.selectExpr("simhash_e(s, n)").collect())
+    assert(sh.getMessage.startsWith("simhash_e: bits must be an integer literal"), sh.getMessage)
+  }
+
   test("sorted_intersect: equals array_intersect on sorted dup-free arrays, both types") {
     graft.functions.IntersectFunctions.register(extSpark)
     import org.apache.spark.sql.functions.{array_intersect, col, sort_array}

@@ -72,6 +72,44 @@ class IndexJobSpec extends AnyFunSuite {
       base.orderBy("key").collect().toSeq)
   }
 
+  test("upsert dedupes once: one row_number window on build and refresh") {
+    import org.apache.spark.sql.catalyst.expressions.RowNumber
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import java.nio.file.{Files, Paths}
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    RefFixtures.registerDogs(spark)
+    val dir = Files.createTempDirectory("graft-upsert").toString
+    spark.table("dogs").write.parquet(s"$dir/dogs.parquet")
+    Files.writeString(Paths.get(s"$dir/dogs.yml"), RefFixtures.dogsYaml)
+    val seen = new LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.put(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the row_number windows in the plans one IndexCli.run executes:
+    // listener events arrive in order, so those between a marker query
+    // and the run's closing count are the run's
+    def rowNumberWindows(): Int = {
+      spark.range(1).toDF("graft_upsert_marker").collect()
+      graft.IndexCli.run(spark, s"$dir/idx", s"$dir/dogs.yml",
+        Map("dogs" -> s"$dir/dogs.parquet"), Tokenize.Porter, None)
+      def next() = Option(seen.poll(60, TimeUnit.SECONDS)).getOrElse(fail("no listener event"))
+      while (!next()._2.analyzed.output.exists(_.name == "graft_upsert_marker")) {}
+      val run = Iterator.continually(next()).span(_._1 != "count")._1.toList
+      run.map(_._2.optimizedPlan.collect {
+        case w: WindowNode if w.windowExpressions.exists(_.find(_.isInstanceOf[RowNumber]).isDefined) => w
+      }.size).sum
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(rowNumberWindows() == 1, "first build")
+      assert(rowNumberWindows() == 1, "refresh")
+    } finally spark.listenerManager.unregister(listener)
+    assert(spark.read.parquet(s"$dir/idx/search_index").count() == 2)
+  }
+
   test("schema probe is analysis-only and lists produced columns (utils.py:68-70)") {
     RefFixtures.registerDogs(spark)
     val cols = IndexJob.deriveColumns(spark,
@@ -79,23 +117,28 @@ class IndexJobSpec extends AnyFunSuite {
     assert(cols == Seq("key", "title", "timestamp", "category", "search_1"))
   }
 
-  test("postings derived from positions equal the direct build; no second exchange") {
+  test("postings equal driver-counted term frequencies; no second exchange") {
     import graft.text.Tokenize
     val toks = TextIndex.docTokens(dogsIndex, Tokenize.Porter)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("term", "type", "key", "tf_title", "tf_s1")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getDouble(3), r.getDouble(4)))
-        .sortBy(t => (t._1, t._2, t._3)).toSeq
-    val direct = rows(TextIndex.postings(toks))
+    // term frequencies counted on the driver from the token arrays
+    val direct = toks.collect().toSeq.flatMap { r =>
+      val title = r.getAs[scala.collection.Seq[String]]("tokens_title")
+      val s1 = r.getAs[scala.collection.Seq[String]]("tokens_s1")
+      (title ++ s1).distinct.map(t => (t, r.getAs[String]("type"), r.getAs[String]("key"),
+        title.count(_ == t).toDouble, s1.count(_ == t).toDouble))
+    }.sortBy(t => (t._1, t._2, t._3))
     // r15 layout: positions() repartitions on term INTERNALLY and rolls
     // occurrences up to per-(term, doc, field) sorted arrays riding that
     // clustering; postingsFromPositions rides the same clustering — the
     // WHOLE two-artifact build must contain exactly ONE exchange (the
     // term repartition)
-    val derived = TextIndex.postingsFromPositions(TextIndex.positions(toks))
-    assert(rows(derived) == direct)
+    val derived = graft.query.SearchEngine.TextArtifacts.build(toks).postings
+    val rows = derived.select("term", "type", "key", "tf_title", "tf_s1")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getDouble(3), r.getDouble(4)))
+      .sortBy(t => (t._1, t._2, t._3)).toSeq
+    assert(rows == direct)
     assert(direct.nonEmpty)
     // count exchanges from the plan top down to (and including) the
     // term repartition: exactly one — the input-building subtree below

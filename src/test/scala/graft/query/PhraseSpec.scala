@@ -29,8 +29,9 @@ class PhraseSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-phrase").toString
     TextIndex.docTokens(index, Tokenize.Porter).write.parquet(s"$dir/doc_tokens")
     val toks = spark.read.parquet(s"$dir/doc_tokens")
-    TextIndex.writeTermPartitioned(TextIndex.postings(toks), s"$dir/postings")
-    TextIndex.writeTermPartitioned(TextIndex.positions(toks), s"$dir/positions")
+    val built = SearchEngine.TextArtifacts.build(toks)
+    TextIndex.writeTermPartitioned(built.postings, s"$dir/postings")
+    TextIndex.writeTermPartitioned(built.positions.get, s"$dir/positions")
     val arts = SearchEngine.TextArtifacts(toks,
       spark.read.parquet(s"$dir/postings"), Some(spark.read.parquet(s"$dir/positions")))
 

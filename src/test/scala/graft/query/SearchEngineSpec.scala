@@ -86,13 +86,12 @@ class SearchEngineSpec extends AnyFunSuite {
 
     val toks = TextIndex.docTokens(index, Tokenize.Porter)
     val dir = java.nio.file.Files.createTempDirectory("graft-postings").toString
-    TextIndex.writeTermPartitioned(TextIndex.postings(toks), s"$dir/postings")
-    TextIndex.writeTermPartitioned(TextIndex.positions(toks), s"$dir/positions")
+    val memArts = SearchEngine.TextArtifacts.build(toks)
+    TextIndex.writeTermPartitioned(memArts.postings, s"$dir/postings")
+    TextIndex.writeTermPartitioned(memArts.positions.get, s"$dir/positions")
     val arts = SearchEngine.TextArtifacts(toks,
       spark.read.parquet(s"$dir/postings"),
       Some(spark.read.parquet(s"$dir/positions")))
-    val memArts = SearchEngine.TextArtifacts(toks,
-      TextIndex.postings(toks), Some(TextIndex.positions(toks)))
 
     // term + boolean + phrase paths: same results as in-memory postings,
     // and the scan carries a static tb partition filter
@@ -118,8 +117,8 @@ class SearchEngineSpec extends AnyFunSuite {
   test("facet counts over q=things (test_plugin.py:45-108)") {
     val toks = TextIndex.docTokens(index, Tokenize.Porter)
     val node = graft.text.FtsQuery.parseOrEscape("things", Tokenize.Porter).get
-    val matched = toks.filter(SearchEngine.matchCondition(node))
-      .select("type", "key").join(index, Seq("type", "key"))
+    val matched = SearchEngine.matchSet(SearchEngine.TextArtifacts.build(toks), node)
+      .join(index, Seq("type", "key"))
     // type facet: emails 2, commits 1
     val typeFacet = matched.groupBy("type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -177,7 +176,7 @@ class SearchEngineSpec extends AnyFunSuite {
   test("prefix and pure-OR queries resolve in the postings index — no token-array scan") {
     import graft.text.FtsQuery
     val toks = TextIndex.docTokens(index, Tokenize.Porter)
-    val arts = SearchEngine.TextArtifacts(toks, TextIndex.postings(toks))
+    val arts = SearchEngine.TextArtifacts.build(toks)
     def planOf(q: String): String = {
       val node = FtsQuery.parseOrEscape(q, Tokenize.Porter).get
       SearchEngine.matchSet(arts, node).queryExecution.optimizedPlan.toString
@@ -203,8 +202,7 @@ class SearchEngineSpec extends AnyFunSuite {
   test("phrases resolve via positional-postings adjacency joins when positions exist") {
     import graft.text.FtsQuery
     val toks = TextIndex.docTokens(index, Tokenize.Porter)
-    val arts = SearchEngine.TextArtifacts(toks, TextIndex.postings(toks),
-      Some(TextIndex.positions(toks)))
+    val arts = SearchEngine.TextArtifacts.build(toks)
     def setOf(q: String): Set[String] = {
       val node = FtsQuery.parseOrEscape(q, Tokenize.Porter).get
       SearchEngine.matchSet(arts, node)
@@ -222,29 +220,26 @@ class SearchEngineSpec extends AnyFunSuite {
       s"positional phrase still scans token arrays:\n$plan")
   }
 
-  test("multi-token phrases verify on a postings candidate set, not the corpus") {
+  test("match sets with and without positions equal FtsQuery.matches") {
     import graft.text.FtsQuery
     val toks = TextIndex.docTokens(index, Tokenize.Porter)
-    val arts = SearchEngine.TextArtifacts(toks, TextIndex.postings(toks))
-    val node = FtsQuery.parseOrEscape("\"email about things\"", Tokenize.Porter).get
-    val ms = SearchEngine.matchSet(arts, node)
-    assert(ms.collect().map(r => r.getString(0) + ":" + r.getString(1)).toSet ==
-      Set(emails1, emails2))
-    // the token-array filter must sit above a semi-join with the
-    // candidate aggregation, i.e. the plan contains a LeftSemi
-    assert(ms.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
-  }
-
-  test("group/NEAR/^ match sets: indexed path agrees with token-array fallback") {
-    import graft.text.FtsQuery
-    val toks = TextIndex.docTokens(index, Tokenize.Porter)
-    val post = TextIndex.postings(toks)
-    val posArts = SearchEngine.TextArtifacts(toks, post, Some(TextIndex.positions(toks)))
-    val noPos = SearchEngine.TextArtifacts(toks, post)
+    val posArts = SearchEngine.TextArtifacts.build(toks)
+    // an index directory written before positions existed
+    val noPos = posArts.copy(positions = None)
     def setOf(arts: SearchEngine.TextArtifacts, q: String): Set[String] = {
       val node = FtsQuery.parseOrEscape(q, Tokenize.Porter).get
       SearchEngine.matchSet(arts, node)
         .collect().map(r => r.getString(0) + ":" + r.getString(1)).toSet
+    }
+    // the reference evaluator over the collected token arrays
+    val docs = toks.collect().map { r =>
+      (r.getAs[String]("type") + ":" + r.getAs[String]("key"),
+        r.getAs[Seq[String]]("tokens_title").toIndexedSeq,
+        r.getAs[Seq[String]]("tokens_s1").toIndexedSeq)
+    }
+    def expected(q: String): Set[String] = {
+      val node = FtsQuery.parseOrEscape(q, Tokenize.Porter).get
+      docs.collect { case (id, t, s1) if FtsQuery.matches(node, t, s1) => id }.toSet
     }
     val queries = Seq(
       "(things OR dogfest) NOT another",
@@ -252,25 +247,17 @@ class SearchEngineSpec extends AnyFunSuite {
       "NEAR(email things, 3)",
       "NEAR(\"about things\" email, 2)",
       "^hey",
-      "title:(hey OR another)")
-    for (q <- queries)
-      assert(setOf(posArts, q) == setOf(noPos, q),
-        s"indexed vs fallback disagree for: $q")
+      "title:(hey OR another)",
+      "\"email about th\"*",
+      "\"email about things\"")
+    for (q <- queries) {
+      val want = expected(q)
+      assert(want.nonEmpty, q)
+      assert(setOf(posArts, q) == want, s"positions = Some disagrees for: $q")
+      assert(setOf(noPos, q) == want, s"positions = None disagrees for: $q")
+    }
     // pinned: ^hey anchors to emails:1's 'hey there...' title only
     assert(setOf(posArts, "^hey") == Set(emails1))
-    // NEAR/^ indexed plans are pure postings algebra — no token-array
-    // scanning. The fallback matchCondition's markers are `instr` (the
-    // phrase fast path) and `sequence(` (phraseStartsCol's position
-    // enumeration over token arrays); the r15 positional path runs
-    // in-row HOFs (exists/array_contains) over doc-level POSITION
-    // LISTS, which is the indexed form, so those are not banned.
-    for (q <- Seq("NEAR(email things, 3)", "^hey")) {
-      val node = FtsQuery.parseOrEscape(q, Tokenize.Porter).get
-      val plan = SearchEngine.matchSet(posArts, node)
-        .queryExecution.optimizedPlan.toString
-      assert(!plan.contains("instr") && !plan.contains("sequence("),
-        s"$q still scans token arrays:\n$plan")
-    }
   }
 
   test("BM25 ranks rarer term higher (relevance order)") {

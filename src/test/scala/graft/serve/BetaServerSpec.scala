@@ -80,6 +80,41 @@ class BetaServerSpec extends AnyFunSuite {
       tokenize = Tokenize.Porter))
   }
 
+  test("8 concurrent GETs each equal the rendered page; catalog untouched") {
+    // no prebuilt artifacts: every page builds them from the index
+    val server = BetaServer.start(spark, index, RefFixtures.pluginRules,
+      port = 0, tokenize = Tokenize.Porter)
+    try {
+      val base = s"http://localhost:${server.getAddress.getPort}/-/beta"
+      val params = Seq(
+        Map("q" -> "things"),
+        Map("q" -> "things", "is_public" -> "0"),
+        Map("q" -> "\"email about things\""),
+        Map("q" -> "email", "sort" -> "oldest"),
+        Map("type" -> "github.db/commits"),
+        Map("q" -> "things NOT email", "category" -> "1"),
+        Map("q" -> "thing*", "timestamp__date" -> "2020-08-02"),
+        Map("q" -> "another OR tests", "sort" -> "newest"))
+      def url(p: Map[String, String]) = base + "?" + p.map { case (k, v) =>
+        s"$k=${java.net.URLEncoder.encode(v, "UTF-8")}" }.mkString("&")
+      def catalog = spark.catalog.listTables().collect()
+        .map(t => (t.name, t.isTemporary)).sorted.toSeq
+      val before = catalog
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(params.size)
+      val bodies =
+        try params.map(p => pool.submit(() => get(url(p)))).map(_.get())
+        finally pool.shutdown()
+      params.zip(bodies).foreach { case (p, (code, body)) =>
+        assert(code == 200, s"$p: ${body.take(1500)}")
+        val expected = BetaHtml.render(SearchPage.assemble(spark, index,
+          RefFixtures.pluginRules, BetaServer.toRequest(p, Tokenize.Porter)))
+        assert(body == expected, p.toString)
+      }
+      assert(bodies(2)._2.contains("Got 2 results"), "three-token phrase")
+      assert(catalog == before)
+    } finally server.stop(0)
+  }
+
   test("live HTTP round-trip on an ephemeral port") {
     val server = BetaServer.start(spark, index, RefFixtures.pluginRules,
       port = 0, tokenize = Tokenize.Porter)
