@@ -1,7 +1,6 @@
 package graft
 
 import graft.text.Tokenize
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. The one-time artifact builds (search index,
@@ -25,27 +24,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Scan-split sizing belongs to the SCALE FACTOR, not to a
-      // constant: the 128 MB default packs this fixture's entire
-      // documents/events file into ONE task, so every scan-rooted
-      // CPU kernel (winnow, langid, quality screens) ran single-core
-      // while 31 cores idled — at 100 TB the same 128 MB default
-      // yields thousands of tasks and is correct. 512k/64k sizes the
-      // local fixture the way 128 MB sizes a production table
-      // (~3 tasks per core); env-overridable for slope experiments.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "524288"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "65536"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession("graft-bench")
 
     // Host load average at cut START (VERDICT r13 item 4): the end-only
     // stamp measured the bench's OWN 32-thread load and contradicted
@@ -211,6 +191,7 @@ object Bench {
       // quoted (ADVICE r11): Spark accepts byte-suffixed settings
       // ("512k") which are valid config but not valid bare JSON
       val mpb = "\"" + spark.conf.get("spark.sql.files.maxPartitionBytes") + "\""
+      val openCost = "\"" + spark.conf.get("spark.sql.files.openCostInBytes") + "\""
       // host load average at cut START and END (VERDICT r11 item 2 +
       // r13 item 4): start is the ambient-contention axis (the cut's
       // admission state), end mostly measures the bench's own 32-thread
@@ -220,7 +201,7 @@ object Bench {
       val loadAvgEnd = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
       val quiet = loadAvgStart >= 0 && loadAvgStart <= 4.0
-      f"""{"heap_gb":${Runtime.getRuntime.maxMemory / 1e9}%.2f,"cpus":$cpus,"tmpdir":"${System.getProperty("java.io.tmpdir")}","max_partition_bytes":$mpb,"load_avg":$loadAvgEnd%.2f,"load_avg_start":$loadAvgStart%.2f,"load_avg_end":$loadAvgEnd%.2f,"quiet_window":$quiet,"cached_rdds":${stEnd.length},"cached_mem_gb":${stEnd.map(_.memSize).sum / 1e9}%.2f,"cached_disk_gb":${stEnd.map(_.diskSize).sum / 1e9}%.2f,"only":$onlyJson}"""
+      f"""{"heap_gb":${Runtime.getRuntime.maxMemory / 1e9}%.2f,"cpus":$cpus,"tmpdir":"${System.getProperty("java.io.tmpdir")}","max_partition_bytes":$mpb,"open_cost_in_bytes":$openCost,"load_avg":$loadAvgEnd%.2f,"load_avg_start":$loadAvgStart%.2f,"load_avg_end":$loadAvgEnd%.2f,"quiet_window":$quiet,"cached_rdds":${stEnd.length},"cached_mem_gb":${stEnd.map(_.memSize).sum / 1e9}%.2f,"cached_disk_gb":${stEnd.map(_.diskSize).sum / 1e9}%.2f,"only":$onlyJson}"""
     }
     val total = results.values.sum
     val contrastTotal = contrastResults.values.sum

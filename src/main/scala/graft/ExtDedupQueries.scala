@@ -68,7 +68,7 @@ private[graft] object ExtDedupQueries {
     // The exact prefix filter (Dedup.ngramJaccardPairsPrefix) was built
     // and benchmarked as the replacement — on THIS corpus the 3-gram
     // universe SATURATES (27k→36k distinct shingles for 10× docs, df
-    // grows ∝N, NgramProbe: blocking sum(df²) 2.8M→279M), so every
+    // grows ∝N, blocking sum(df²) 2.8M→279M; PLANS_r9.md §3), so every
     // doc's "rarest" shingles are corpus-hot at scale and the exact
     // prefix join goes quadratic (>600 s at sf1 vs 13.9 s capped, 7.1×
     // sf0.1→sf1 warm slope). Capped blocking keeps candidate volume

@@ -542,8 +542,8 @@ private[graft] object ExtStreamQueries {
           .option("maxFilesPerTrigger", "2").parquet(srcDir)
         // r15: the fused one-kernel-pass gate (TextAnalysis.curationGate)
         // — identical predicted_lang/quality_score expressions, one
-        // text_gate_e pass instead of two (CurProbe: gates were 12.4 s
-        // of the 14.6 s sf1 stream)
+        // text_gate_e pass instead of two (OPTIMIZATION_r15.md: gates
+        // were 12.4 s of the 14.6 s sf1 stream)
         val gated = TextAnalysis.curationGate(stream, "text")
           .filter(col("quality_score") >= 0.5 &&
             col("predicted_lang") === col("lang"))

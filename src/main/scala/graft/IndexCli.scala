@@ -26,7 +26,7 @@ object IndexCli {
 
   def main(args: Array[String]): Unit = {
     val (indexDir, configPath, sources, tokenize, databases) = parseArgs(args)
-    val spark = Cli.session("graft-index")
+    val spark = GraftSession("graft-index")
     try run(spark, indexDir, configPath, sources, tokenize, databases)
     finally spark.stop()
   }

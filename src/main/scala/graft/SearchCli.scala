@@ -40,7 +40,7 @@ object SearchCli {
         case other => throw new IllegalArgumentException(s"unknown arg: $other")
       }
     }
-    val spark = Cli.session("graft-search")
+    val spark = GraftSession("graft-search")
     try {
       val index = spark.read.parquet(s"$indexDir/search_index")
       val out = SearchEngine.search(spark, index,

@@ -42,7 +42,7 @@ object ServeCli {
         case other => throw new IllegalArgumentException(s"unknown arg: $other")
       }
     }
-    val spark = Cli.session("graft-serve")
+    val spark = GraftSession("graft-serve")
     sources.foreach { case (view, path) =>
       spark.read.parquet(path).createOrReplaceTempView(view)
     }

@@ -3,7 +3,6 @@ package graft
 import graft.query.SearchEngine
 import graft.query.SearchEngine.Request
 import graft.text.Tokenize
-import org.apache.spark.sql.SparkSession
 
 /** Smoke + hostile-input drive (the `/verify` skill's probe surface):
   * `ENTRY` = the driver's rows>0 check on [[SparkEntry.entry]];
@@ -17,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-smoke")
     try {
       val entryRows = SparkEntry.entry(spark).count()
       println(s"ENTRY rows=$entryRows ok=${entryRows > 0}")

@@ -9,14 +9,7 @@ object Verify {
     // extra args = run only these queries (local iteration; the driver
     // passes exactly two args and gets the full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Diagnostic CSVs live in a SIBLING dir, not inside outDir: the
     // driver treats every outDir subdirectory as a query's parquet dump,

@@ -311,7 +311,7 @@ object Dedup {
     * 100 TB shape: dfs + sizes are one shuffle each over the shingle
     * relation; the prefix window is one shuffle by doc; the candidate
     * join is bounded by Σ prefix-df² over RARE shingles. CAVEAT,
-    * measured (NgramProbe, r8): this bound is near-linear only while
+    * measured (PLANS_r9.md §3): this bound is near-linear only while
     * the shingle UNIVERSE grows with the corpus (natural vocabulary).
     * On a saturated universe (template-generated corpora: distinct
     * 3-shingles 27k→36k for 10× docs, so every df inflates ∝N and even
@@ -394,7 +394,7 @@ object Dedup {
     * pair join touches only candidate docs' SINGLE array rows, `shared`
     * is the compiled two-pointer merge count (`sorted_intersect`), and
     * sizes ride the same rows — at sf1 this was ~14.6 s of the 20 s
-    * pair-artifact build (DedupBuildProbe). Inputs are per-doc
+    * pair-artifact build (r15; VERDICT.md's r15 table). Inputs are per-doc
     * duplicate-free by the shingle producers' contract, so the merge
     * count equals the join count exactly; the explicit `shared > 0`
     * filter reproduces the exploded form's inner-join row set for ANY

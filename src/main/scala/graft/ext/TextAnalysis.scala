@@ -387,7 +387,7 @@ object TextAnalysis {
     * one map-side explode of the already-doc-unique selections. A pure
     * map stage — zero exchange.
     *
-    * Crossover (MEASURED, WinnowProbe on sf0.1 replicated ×1/×4/×10 ≈
+    * Crossover (MEASURED, PLANS_r4.md: sf0.1 replicated ×1/×4/×10 ≈
     * sf1, local[32]): explode+window wins ~2× at every local scale
     * (6.8 vs 12.9 s, 24.9 vs 51.7 s, 61.2 vs 129.0 s) — the ratio is
     * flat, so there is NO local crossover. Root cause: lambda bodies in

@@ -21,25 +21,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * (r8 verdict item 3: 68.7 s at sf1 + the 34.8 s chunk-dedup
   * consumer). This kernel is the identical boundary rule as one
   * compiled JVM call per row: tight loop, one thread-local
-  * MessageDigest, no per-position expression interpretation.
+  * [[KernelText.Hasher]], no per-position expression interpretation.
   *
   * Value parity (== the SQL form == the DuckDB oracle): a cut falls
   * AFTER 1-based codepoint position `i` for `i ∈ [window, len−1]`
-  * iff the first 15 hex chars of md5 of the UTF-8 bytes of
-  * `substring(text, i−window+1, window)` — read as a 60-bit integer,
-  * exactly [[graft.ext.Dedup.portableHash]] — land on
+  * iff [[KernelText.Hasher.hash]] of the UTF-8 bytes of
+  * `substring(text, i−window+1, window)` — exactly
+  * [[graft.ext.Dedup.portableHash]] — lands on
   * `0 mod modulus`. Returns `[0] ++ cuts ++ [len]`; substrings use
   * `substringSQL`, the same codepoint semantics as SQL `substring`.
   */
 object CdcImpl {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   def bounds(s: UTF8String, window: Int, modulus: Int): ArrayData = {
     val n = s.numChars()
-    val md = mdLocal.get()
+    val hasher = KernelText.hasher
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     out += 0L
     if (n > window) {
@@ -52,18 +47,11 @@ object CdcImpl {
       val bytes = if (ascii) s.getBytes else null
       var i = window
       while (i < n) {
-        md.reset()
-        val d = if (ascii) {
-          md.update(bytes, i - window, window)
-          md.digest()
-        } else {
-          md.digest(s.substringSQL(i - window + 1, window).getBytes)
+        val v = if (ascii) hasher.hash(bytes, i - window, window)
+        else {
+          val w = s.substringSQL(i - window + 1, window).getBytes
+          hasher.hash(w, 0, w.length)
         }
-        // first 15 hex chars as a number: bytes 0..6 + high nibble of 7
-        var v = 0L
-        var j = 0
-        while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-        v = (v << 4) | ((d(7) >> 4) & 0x0fL)
         if (v % modulus == 0) out += i.toLong
         i += 1
       }

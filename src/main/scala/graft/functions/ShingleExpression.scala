@@ -25,21 +25,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * dominant shuffle of the whole dedup family; narrowing its key is
   * the single highest-leverage byte saving.
   *
-  * Value parity: tokens = the `Tokenizer.tokensCol` contract (split
-  * on runs of anything outside [a-z0-9]; caller lowercases with
-  * Spark's own `lower`), shingle = n consecutive tokens joined by one
-  * space, hash = first 15 hex chars of md5 of the UTF-8 bytes — the
-  * exact `Dedup.portableHash` / DuckDB `substr(md5(x),1,15)` value,
-  * raw (callers mod by the Mersenne prime where needed).
+  * Value parity: tokens = [[KernelText.foreachToken]] (the
+  * `Tokenizer.tokensCol` contract; caller lowercases with Spark's own
+  * `lower`), shingle = n consecutive tokens joined by one space, hash =
+  * [[KernelText.Hasher.hash]] of the shingle — the exact
+  * `Dedup.portableHash` value, raw (callers mod by the Mersenne prime
+  * where needed).
   */
 object ShingleImpl {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private def isTokenChar(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
 
   /** Ordered, NON-distinct gram hashes — element i is the hash of the
     * gram STARTING at token position i, so `posexplode` over the result
@@ -49,65 +42,35 @@ object ShingleImpl {
     * [[compute]].
     */
   def computeAll(s: UTF8String, n: Int): ArrayData = {
-    val str = s.toString
-    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    val len = str.length
-    while (i < len) {
-      if (isTokenChar(str.charAt(i))) {
-        val start = i
-        while (i < len && isTokenChar(str.charAt(i))) i += 1
-        toks += str.substring(start, i)
-      } else i += 1
-    }
-    val nToks = toks.length
-    if (nToks < n) return new GenericArrayData(Array.empty[Long])
-    val md = mdLocal.get()
-    val out = new Array[Long](nToks - n + 1)
-    val sb = new java.lang.StringBuilder
-    var t = 0
-    while (t <= nToks - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(t + j))
-        j += 1
-      }
-      md.reset()
-      val d = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var v = 0L
-      var b = 0
-      while (b < 7) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-      v = (v << 4) | ((d(7) >> 4) & 0x0fL)
-      out(t) = v
-      t += 1
-    }
+    val toks = tokens(s)
+    if (toks.length < n) return new GenericArrayData(Array.empty[Long])
+    val out = new Array[Long](toks.length - n + 1)
+    foreachGramHash(toks, n)((t, h) => out(t) = h)
     new GenericArrayData(out)
   }
 
   def compute(s: UTF8String, n: Int): ArrayData = {
-    val str = s.toString
-    // tokenize: maximal runs of [a-z0-9] (== split on [^a-z0-9]+ and
-    // drop empties — the Tokenizer.tokensCol contract)
-    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    val len = str.length
-    while (i < len) {
-      if (isTokenChar(str.charAt(i))) {
-        val start = i
-        while (i < len && isTokenChar(str.charAt(i))) i += 1
-        toks += str.substring(start, i)
-      } else i += 1
-    }
-    val nToks = toks.length
-    if (nToks < n) return new GenericArrayData(Array.empty[Long])
-    val md = mdLocal.get()
+    val toks = tokens(s)
+    if (toks.length < n) return new GenericArrayData(Array.empty[Long])
     val seen = new java.util.HashSet[Long]()
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    foreachGramHash(toks, n)((_, h) => if (seen.add(h)) out += h)
+    new GenericArrayData(out.toArray)
+  }
+
+  private def tokens(s: UTF8String): scala.collection.mutable.ArrayBuffer[String] = {
+    val toks = scala.collection.mutable.ArrayBuffer.empty[String]
+    KernelText.foreachToken(s.toString)(toks += _)
+    toks
+  }
+
+  /** `f(t, hash)` for the gram starting at each token position `t`. */
+  private def foreachGramHash(
+      toks: scala.collection.mutable.ArrayBuffer[String], n: Int)(f: (Int, Long) => Unit): Unit = {
+    val hasher = KernelText.hasher
     val sb = new java.lang.StringBuilder
     var t = 0
-    while (t <= nToks - n) {
+    while (t <= toks.length - n) {
       sb.setLength(0)
       var j = 0
       while (j < n) {
@@ -115,17 +78,9 @@ object ShingleImpl {
         sb.append(toks(t + j))
         j += 1
       }
-      md.reset()
-      val d = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 15 hex chars as a number: bytes 0..6 + high nibble of 7
-      var v = 0L
-      var b = 0
-      while (b < 7) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-      v = (v << 4) | ((d(7) >> 4) & 0x0fL)
-      if (seen.add(v)) out += v
+      f(t, hasher.hash(sb.toString))
       t += 1
     }
-    new GenericArrayData(out.toArray)
   }
 }
 

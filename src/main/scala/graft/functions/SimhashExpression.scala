@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * second groupBy(doc) exchange updating SIXTY conditional-sum
   * aggregate expressions per (doc, token) row — the most
   * expression-dense aggregate in the engine (27.6 s cold / 8.7 s warm
-  * at sf1 in the r15 DedupBuildProbe decomposition, the largest single
-  * stage of dedup_build).
+  * at sf1 in the r15 dedup_build decomposition, VERDICT.md's r15 table —
+  * the largest single stage of dedup_build).
   *
   * A doc's SimHash depends only on its own token multiset, so over the
   * document row it is a pure projection: no explode, no exchanges, and
@@ -25,13 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * instead of per aggregate-expression per row.
   *
   * Value parity with the relational form (bit-for-bit):
-  *  - tokens: maximal [a-z0-9] runs of the ALREADY-LOWERED input — the
-  *    structural identity with `Tokenizer.tokensCol` (split on
-  *    [^a-z0-9]+, drop empties) that `shingle_hashes_e`/`text_gate_e`
-  *    already rely on; the caller lowercases with Spark's own `lower`.
+  *  - tokens: [[KernelText.foreachToken]] over the ALREADY-LOWERED input, the
+  *    scanner `shingle_hashes_e`/`text_gate_e` share; the caller
+  *    lowercases with Spark's own `lower`.
   *  - weight w = occurrence count per distinct token (exact Long).
-  *  - h = first 15 hex chars of md5(token UTF-8 bytes) as a Long — the
-  *    exact `Dedup.portableHash` value ([[ShingleImpl]]'s hashing).
+  *  - h = [[KernelText.Hasher.hash]] of the token — the exact
+  *    `Dedup.portableHash` value.
   *  - bit j of the signature set iff Σ_tokens (bit_j(h) ? w : −w) > 0,
   *    Long-exact sums.
   *  - A doc with NO tokens yields NULL (the relational form emits no
@@ -39,40 +38,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the NULLs to keep the row set identical).
   */
 object SimhashImpl {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private def isTokenChar(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
 
   def compute(s: UTF8String, bits: Int): java.lang.Long = {
-    val str = s.toString
     val counts = new java.util.HashMap[String, Long]()
-    var i = 0
-    val len = str.length
-    while (i < len) {
-      if (isTokenChar(str.charAt(i))) {
-        val start = i
-        while (i < len && isTokenChar(str.charAt(i))) i += 1
-        counts.merge(str.substring(start, i), 1L, (a, b) => a + b)
-      } else i += 1
-    }
+    KernelText.foreachToken(s.toString)(t => counts.merge(t, 1L, (a, b) => a + b))
     if (counts.isEmpty) return null
     val sums = new Array[Long](bits)
-    val md = mdLocal.get()
+    val hasher = KernelText.hasher
     val it = counts.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      md.reset()
-      val d = md.digest(e.getKey.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 15 hex chars as a number: bytes 0..6 + high nibble of 7
-      // (the ShingleImpl / Dedup.portableHash value)
-      var h = 0L
-      var b = 0
-      while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-      h = (h << 4) | ((d(7) >> 4) & 0x0fL)
+      val h = hasher.hash(e.getKey)
       val w = e.getValue
       var j = 0
       while (j < bits) {

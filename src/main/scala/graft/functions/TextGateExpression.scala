@@ -20,15 +20,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * and ~10 higher-order array traversals per row — HOFs are
   * interpreted, outside whole-stage codegen AND outside codegen
   * subexpression elimination, so the composed curation gate paid ~5
-  * regex tokenizations per document (CurProbe r15: the gate projections
-  * alone were 12.4 s of x_stream_curation's 14.6 s at sf1). This kernel
-  * makes all token-derived gate statistics ONE compiled pass.
+  * regex tokenizations per document (OPTIMIZATION_r15.md's sf1 warm
+  * decomposition: the gate projections alone were 12.4 s of
+  * x_stream_curation's 14.6 s). This kernel makes all token-derived
+  * gate statistics ONE compiled pass.
   *
   * Tokenizer identity (bit-parity with
   * [[graft.text.Tokenizer.tokensCol]] = `filter(split(lower(coalesce(
   * text, '')), "[^a-z0-9]+"), t => t != "")`): the kernel lowercases
-  * via the same UTF8String.toLowerCase that `lower()` uses, and a token
-  * is a MAXIMAL run of [a-z0-9] — exactly the non-empty pieces of the
+  * via the same UTF8String.toLowerCase that `lower()` uses, and splits
+  * with [[KernelText.foreachToken]] — exactly the non-empty pieces of the
   * regex split. Counts:
   *
   *  - n_tokens: number of tokens (= `size(tokens)`)
@@ -40,34 +41,19 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextGateImpl {
   def compute(s: UTF8String, sets: Array[java.util.HashSet[String]]): InternalRow = {
-    val str = if (s == null) "" else s.toLowerCase.toString
-    val n = str.length
     var nTokens = 0
     var tokCharSum = 0L
     val distinct = new java.util.HashSet[String]()
     val hits = new Array[Int](sets.length)
-    var i = 0
-    while (i < n) {
-      val c = str.charAt(i)
-      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) {
-        var j = i + 1
-        var ok = true
-        while (j < n && ok) {
-          val cj = str.charAt(j)
-          if ((cj >= 'a' && cj <= 'z') || (cj >= '0' && cj <= '9')) j += 1
-          else ok = false
-        }
-        val tok = str.substring(i, j)
-        nTokens += 1
-        tokCharSum += (j - i).toLong
-        distinct.add(tok)
-        var l = 0
-        while (l < sets.length) {
-          if (sets(l).contains(tok)) hits(l) += 1
-          l += 1
-        }
-        i = j
-      } else i += 1
+    KernelText.foreachToken(if (s == null) "" else s.toLowerCase.toString) { tok =>
+      nTokens += 1
+      tokCharSum += tok.length.toLong
+      distinct.add(tok)
+      var l = 0
+      while (l < sets.length) {
+        if (sets(l).contains(tok)) hits(l) += 1
+        l += 1
+      }
     }
     new GenericInternalRow(Array[Any](
       nTokens, distinct.size, tokCharSum,
@@ -99,7 +85,7 @@ case class TextGateStats(child: Expression, langWords: Seq[Seq[String]])
   // columns DERIVED from this struct, and predicate pushdown substitutes
   // those aliases — inlining one full kernel call PER REFERENCE into the
   // pushed predicate (~15 tokenization passes per row for the curation
-  // gate, measured via CurProbe r15). The value is pure and
+  // gate, recorded in OPTIMIZATION_r15.md). The value is pure and
   // deterministic; this flag only forbids the optimizer to duplicate,
   // reorder, or constant-fold the call, so each row tokenizes ONCE in
   // the Project and the filter consumes the materialized columns. The

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * keeps BOTH properties: one compiled JVM call per row (tight loops,
   * no per-element boxing) and zero exchange.
   *
-  * Value parity: hash = first 15 hex chars of md5 of the UTF-8 bytes
+  * Value parity: hash = [[KernelText.Hasher.hash]] of the UTF-8 bytes
   * (== `Dedup.portableHash` == DuckDB `substr(md5(x),1,15)`), taken
   * mod 2^31-1; selection key = h·2^31 + (2^31 - pos) (rightmost-min
   * rule as one scalar min); fingerprint = key >> 31. Substrings use
@@ -31,10 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
 object WinnowImpl {
   val Prime = 2147483647L // 2^31-1
   private val Two31 = 2147483648L
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** Distinct selected fingerprints of `s` (already lowercased by the
     * caller — the column layer applies Spark's own `lower` so case
@@ -44,19 +40,20 @@ object WinnowImpl {
     * board's largest honest entry): ONE `getBytes` per document, k-gram
     * bytes fed to the digest straight from that array via a
     * codepoint→byte-offset table (identity offsets skipped entirely on
-    * the pure-ASCII fast path), the 16-byte digest written into a
-    * reused buffer — zero per-gram allocation. The old form allocated
-    * a substring UTF8String + its byte copy + a fresh digest array per
-    * gram and boxed every fingerprint into a HashSet; allocations, not
-    * MD5, were the measured cost. Output order is free (every consumer
-    * is set-shaped: explode → distinct/sort), so dedup is
-    * adjacent-skip + one primitive sort instead of a boxing hash set.
+    * the pure-ASCII fast path), the digest written into the
+    * [[KernelText.Hasher]]'s reused buffer — zero per-gram allocation.
+    * The old form allocated a substring UTF8String + its byte copy + a
+    * fresh digest array per gram and boxed every fingerprint into a
+    * HashSet; allocations, not MD5, were the measured cost. Output
+    * order is free (every consumer is set-shaped: explode →
+    * distinct/sort), so dedup is adjacent-skip + one primitive sort
+    * instead of a boxing hash set.
     */
   def compute(s: UTF8String, k: Int, window: Int): ArrayData = {
     val nChars = s.numChars()
     val nGrams = nChars - k + 1
     if (nGrams < window) return new GenericArrayData(Array.empty[Long])
-    val md = mdLocal.get()
+    val hasher = KernelText.hasher
     val bytes = s.getBytes
     val ascii = bytes.length == nChars
     val offs: Array[Int] =
@@ -74,18 +71,11 @@ object WinnowImpl {
         o
       }
     val keys = new Array[Long](nGrams)
-    val d16 = new Array[Byte](16)
-    md.reset() // defend against a prior aborted computation on this thread
     var i = 0
     while (i < nGrams) {
-      if (ascii) md.update(bytes, i, k)
-      else md.update(bytes, offs(i), offs(i + k) - offs(i))
-      md.digest(d16, 0, 16) // digest() resets the engine for the next gram
-      // first 15 hex chars as a number: bytes 0..6 + high nibble of 7
-      var v = 0L
-      var j = 0
-      while (j < 7) { v = (v << 8) | (d16(j) & 0xffL); j += 1 }
-      v = (v << 4) | ((d16(7) >> 4) & 0x0fL)
+      val v =
+        if (ascii) hasher.hash(bytes, i, k)
+        else hasher.hash(bytes, offs(i), offs(i + k) - offs(i))
       keys(i) = (v % Prime) * Two31 + (Two31 - (i + 1))
       i += 1
     }

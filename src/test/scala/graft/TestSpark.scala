@@ -4,25 +4,27 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for every suite (sbt forks one test
   * JVM; session startup is ~8s, so suites must not each build one).
+  * It is a [[GraftSession]]: the suites run under the engine's own
+  * settings (extension, scan-split sizing, UTC), with a fixed width and
+  * a private warehouse.
   */
 object TestSpark {
+  private val warehouse =
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+
+  /** The settings the suites replace; every other [[GraftSession]]
+    * setting applies unchanged.
+    */
+  val overrides: Seq[(String, String)] = Seq(
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" -> warehouse,
+    "javax.jdo.option.ConnectionURL" ->
+      s"jdbc:derby:;databaseName=$warehouse/metastore_db;create=true")
+
   lazy val spark: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$wh/metastore_db;create=true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession("graft-tests", overrides: _*)
     s.sparkContext.setLogLevel("ERROR")
-    // the engine's native functions (porter_stem, token_pipe_e, ...) —
-    // production paths get these from Corpus.registerSources; suites
-    // that build DataFrames directly need them on the session too
-    GraftExtensions.register(s)
     s
   }
 }

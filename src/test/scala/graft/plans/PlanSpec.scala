@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * invariants that five rounds of plan audits established, asserted so
   * a future edit cannot silently re-introduce a shuffle, a window, or a
   * cartesian product that the audits removed. Each assertion mirrors a
-  * PLANS_r{N} claim; the evidence dumps live in PlanDump.
+  * PLANS_r{N} claim; the evidence dumps live in PLANS_r{N}.md and
+  * `plans/`.
   *
   * Counting is string-based over the physical plan tree (stable across
   * AQE wrapping: the printed initial plan carries the same operator

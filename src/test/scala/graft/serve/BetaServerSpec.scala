@@ -80,6 +80,23 @@ class BetaServerSpec extends AnyFunSuite {
       tokenize = Tokenize.Porter))
   }
 
+  test("GET ?q=100% gets 400 from the server before the handler runs") {
+    // parseQuery's URLDecoder would throw on `100%` (a 500); the JDK
+    // server's own URI check refuses the request first. The request line
+    // goes out verbatim: java.net.URI cannot hold `100%`.
+    val server = BetaServer.start(spark, index, RefFixtures.pluginRules,
+      port = 0, tokenize = Tokenize.Porter)
+    try {
+      val sock = new java.net.Socket("localhost", server.getAddress.getPort)
+      try {
+        sock.getOutputStream.write(("GET /-/beta?q=100% HTTP/1.1\r\n" +
+          "Host: localhost\r\nConnection: close\r\n\r\n").getBytes("US-ASCII"))
+        val resp = new String(sock.getInputStream.readAllBytes(), "UTF-8")
+        assert(resp.startsWith("HTTP/1.1 400 "), resp)
+      } finally sock.close()
+    } finally server.stop(0)
+  }
+
   test("8 concurrent GETs each equal the rendered page; catalog untouched") {
     // no prebuilt artifacts: every page builds them from the index
     val server = BetaServer.start(spark, index, RefFixtures.pluginRules,

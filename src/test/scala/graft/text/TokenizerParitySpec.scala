@@ -1,7 +1,8 @@
 package graft.text
 
 import graft.TestSpark
-import org.apache.spark.sql.functions.col
+import graft.functions.KernelText
+import org.apache.spark.sql.functions.{col, filter, lower, split}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The column-side tokenizer (codegen'd split in the executors) and the
@@ -78,6 +79,23 @@ class TokenizerParitySpec extends AnyFunSuite {
     // ASCII folds, ASCII punctuation separates
     assert(Tokenizer.tokenize("Café-BAR É漢字 x", Tokenize.Ascii) ==
       Seq("café", "bar", "É漢字", "x"))
+  }
+
+  test("kernel scanner == regex split; kernel hash == Dedup.portableHash") {
+    import spark.implicits._
+    val got = genStrings(500).toDF("s")
+      .select(col("s"),
+        filter(split(lower(col("s")), "[^a-z0-9]+"), t => t =!= "").as("toks"),
+        lower(col("s")).as("lowered"),
+        graft.ext.Dedup.portableHash(col("s")).as("h"))
+      .collect()
+    got.foreach { r =>
+      val s = r.getString(0)
+      val toks = scala.collection.mutable.ArrayBuffer.empty[String]
+      KernelText.foreachToken(r.getString(2))(toks += _)
+      assert(toks == r.getSeq[String](1), s)
+      assert(KernelText.hasher.hash(s) == r.getLong(3), s)
+    }
   }
 
   test("FTS5 tokenizer specs parse like the reference CLI (cli.py:22-26)") {
