@@ -38,8 +38,6 @@ object Corpus {
     */
   def registerSources(spark: SparkSession, sfDir: String): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // engine functions available to user extraction SQL (S3 surface)
-    GraftExtensions.register(spark)
     tables.foreach { t =>
       val df0 = spark.read.parquet(s"$sfDir/$t.parquet")
       val df =

@@ -40,6 +40,9 @@ object GraftExtensions {
     ("dot_product_d",
       "dot_product_d(a, b) - dot product of two double arrays.",
       exprs => DotProductDouble(exprs(0), exprs(1))),
+    ("sorted_intersect",
+      "sorted_intersect(a, b) - two-pointer merge intersection of two sorted duplicate-free arrays.",
+      exprs => graft.functions.SortedIntersect(exprs(0), exprs(1))),
     ("fts_match",
       "fts_match(title, search_1, query) - FTS5-style boolean MATCH over two text fields.",
       exprs => FtsMatch(exprs(0), exprs(1), exprs(2))),

@@ -188,7 +188,6 @@ object SearchQueries {
         // ScalaUDF — keeps "zero ScalaUDF in src/main" a checkable
         // invariant (VERDICT r13 item 5); same PorterStemmer.stem
         // underneath, golden pin unchanged
-        GraftExtensions.register(spark)
         arts.docTokens
           .select(explode(col("tokens_s1")).as("token"))
           .distinct()

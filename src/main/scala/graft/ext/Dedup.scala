@@ -267,7 +267,6 @@ object Dedup {
         // shingles — on the r9 fixture at sf1 that was 2 extra ~90M-row
         // shuffles and a 21× scale slope; this form is two joins
         // against a docs-sized relation and no expansion at all.
-        graft.functions.IntersectFunctions.register(sh.sparkSession)
         val hotArr = sh.join(dfs.filter(col("__df") > cap), "shingle")
           .groupBy("doc_id")
           .agg(sort_array(collect_list(col("shingle"))).as("__hs"))
@@ -403,7 +402,6 @@ object Dedup {
   def minhashNearDupsFromDocArrs(arrs: DataFrame, sigs: DataFrame,
       k: Int, bands: Int, threshold: Double): DataFrame = {
     val cands = lshCandidates(sigs, k, bands)
-    graft.functions.IntersectFunctions.register(arrs.sparkSession)
     cands
       .join(arrs.select(col("doc_id").as("id_a"), col("__arr").as("__aa"),
         col("n_sh").as("n_a")), "id_a")
@@ -535,7 +533,6 @@ object Dedup {
       .join(broadcast(banded(sigD, "delta_id")), Seq("band", "band_key"))
       .select("delta_id", "corpus_id").distinct()
       .localCheckpoint(true)
-    graft.functions.IntersectFunctions.register(arrsC.sparkSession)
     cands
       .join(arrsD.select(col("doc_id").as("delta_id"), col("__arr").as("__da"),
         col("n_sh").as("n_d")), "delta_id")
@@ -607,7 +604,6 @@ object Dedup {
     // duplicate-free by the shingle producers' contract
     // ([[shingles]] is `.distinct()`, [[shingleHashes]] distinct
     // in-row), so the merge count equals the join count exactly.
-    graft.functions.IntersectFunctions.register(sh.sparkSession)
     val arrs = sh.groupBy("doc_id")
       .agg(sort_array(collect_list(col("shingle"))).as("__arr"),
         count(lit(1)).as("n_sh"))

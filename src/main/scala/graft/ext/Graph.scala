@@ -305,7 +305,6 @@ object Graph {
     // join is the query's whole cost (~12M rows × ~60-element lists
     // at sf1; r8 verdict item 5's bench-context investigation landed
     // here: the "context gap" was this kernel's constant)
-    graft.functions.IntersectFunctions.register(edges.sparkSession)
     val adj = oe.groupBy(col("u"))
       .agg(sort_array(collect_list(col("v"))).as("nbrs")).localCheckpoint(true)
     // localCheckpoint: tri feeds the per-node credit union THREE ways

@@ -354,7 +354,6 @@ object Pipeline {
   def contaminationBloom(docs: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String = "doc_id", minShared: Int = 5,
       numBits: Long = 1L << 22): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     val corpusFps = TextAnalysis.winnowFingerprintsNative(docs, textCol, idCol)
     val benchFps = TextAnalysis.winnowFingerprintsNative(benchmark, textCol, idCol)
       .select(col("fp")).distinct()

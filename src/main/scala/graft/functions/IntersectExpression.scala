@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -154,13 +154,9 @@ case class SortedIntersect(left: Expression, right: Expression)
 
 object IntersectFunctions {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect",
-      exprs => SortedIntersect(exprs(0), exprs(1)),
-      "built-in")
-
-  /** Column API (requires [[register]] on the session). */
+  /** Column API; every session running [[graft.GraftExtensions]] (every
+    * [[graft.GraftSession]]) resolves `sorted_intersect`.
+    */
   def sorted_intersect(a: Column, b: Column): Column =
     call_function("sorted_intersect", a, b)
 }

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.text.{Tokenize, Tokenizer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-text index artifacts, rebuilt from the document table as a batch
@@ -105,10 +105,7 @@ object TextIndex {
     !r.isNullAt(0) && r.getBoolean(0)
   }
 
-  private def stem(spark: SparkSession)(c: org.apache.spark.sql.Column) = {
-    graft.GraftExtensions.register(spark)
-    call_function("porter_stem", c)
-  }
+  private def stem(c: org.apache.spark.sql.Column) = call_function("porter_stem", c)
 
   /** Porter docTokens DERIVED from the default-tokenizer docTokens —
     * valid ONLY when [[hasNonAscii]] is false: on pure-ASCII text the
@@ -119,10 +116,9 @@ object TextIndex {
     * second index build: the source re-scan and regex re-split.
     */
   def stemTokens(docTokens: DataFrame): DataFrame = {
-    val s = stem(docTokens.sparkSession) _
     docTokens
-      .withColumn("tokens_title", transform(col("tokens_title"), s(_)))
-      .withColumn("tokens_s1", transform(col("tokens_s1"), s(_)))
+      .withColumn("tokens_title", transform(col("tokens_title"), stem(_)))
+      .withColumn("tokens_s1", transform(col("tokens_s1"), stem(_)))
   }
 
   /** Positional postings stem-mapped term-by-term (same ASCII-only
@@ -135,8 +131,7 @@ object TextIndex {
     * term-clustered like [[positions]].
     */
   def stemPositions(positions: DataFrame): DataFrame =
-    positions.withColumn("term",
-        stem(positions.sparkSession)(col("term")))
+    positions.withColumn("term", stem(col("term")))
       .repartition(col("term"))
       .groupBy("term", "type", "key", "field")
       .agg(sort_array(flatten(collect_list(col("poss")))).as("poss"))

@@ -22,9 +22,10 @@ import java.nio.charset.StandardCharsets
   * same page the local session does.
   *
   * A request leaves the session as it found it: page assembly
-  * registers no temp view, enrichment runs over the page's own rows,
-  * and `q` reaches `display_sql` only as a bound `:q` parameter. The
-  * JDK server still handles one request at a time.
+  * registers no temp view and no function (the engine's functions come
+  * with the session extension), enrichment runs over the page's own
+  * rows, and `q` reaches `display_sql` only as a bound `:q` parameter.
+  * The JDK server still handles one request at a time.
   */
 object BetaServer {
 

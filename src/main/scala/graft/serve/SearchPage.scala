@@ -23,8 +23,9 @@ import java.net.URLEncoder
   * driver never collects an unbounded value list), and one enrichment
   * join per result type.
   *
-  * Results and facets share one filter + match plan
-  * ([[SearchEngine.filteredMatch]]); facets use `Dataset.groupingSets`,
+  * A page derives its filter + match once ([[SearchEngine.filteredMatch]])
+  * and hands that one `base` to the top-k ([[SearchEngine.rank]]) and to
+  * the facet job; facets use `Dataset.groupingSets`,
   * so a request registers no temp view and touches no other session
   * state, and concurrent requests cannot see each other's rows.
   * Enrichment reads the page's collected rows (a local relation of
@@ -136,8 +137,8 @@ object SearchPage {
       facetSize: Int = DefaultFacetSize, templateDebug: Boolean = false): Page = {
 
     val q = req.q.getOrElse("").trim
-    val results = SearchEngine.search(spark, index, req, arts)
-    val (base, _) = SearchEngine.filteredMatch(index, req, arts)
+    val (base, matched) = SearchEngine.filteredMatch(index, req, arts)
+    val results = SearchEngine.rank(base, matched, req.sort)
 
     // ONE job: count + all four facets via grouping sets, each facet
     // capped to `facetSize` values (count desc, value asc) INSIDE the

@@ -218,7 +218,6 @@ object IncrementalIndexer {
       corpusBanded: DataFrame, corpusArrs: DataFrame, k: Int, bands: Int,
       threshold: Double): DataFrame = {
     graft.functions.ShingleFunctions.register(spark)
-    graft.functions.IntersectFunctions.register(spark)
     val rowsPerBand = k / bands
     val withSh = docs
       .select(col("doc_id").as("delta_id"),
@@ -282,7 +281,6 @@ object IncrementalIndexer {
       rarePostings: DataFrame, corpusArrs: DataFrame,
       minShingles: Int, thresholdPermille: Int): DataFrame = {
     graft.functions.ShingleFunctions.register(spark)
-    graft.functions.IntersectFunctions.register(spark)
     val withSh = docs
       .select(col("doc_id").as("delta_id"),
         sort_array(graft.functions.ShingleFunctions.shingle_hashes_e(

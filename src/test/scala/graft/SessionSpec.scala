@@ -5,23 +5,41 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Every session the engine runs on comes from [[GraftSession]], so
-  * answers are checked, timed and planned under one configuration.
+  * answers are checked, timed and planned under one configuration, and
+  * its functions come with [[GraftExtensions]].
   */
 class SessionSpec extends AnyFunSuite {
 
-  test("no session is built outside GraftSession") {
-    val needle = "SparkSession" + ".builder" // not a hit in this file
-    val hits = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+  /** "file:line" of every line under `roots` holding one of `needles`. */
+  private def hits(roots: Seq[String], needles: Seq[String], skip: String = ""): Seq[String] =
+    roots.flatMap { root =>
       val files = Files.walk(Paths.get(root))
       try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
-    }.filterNot(_.getFileName.toString == "GraftSession.scala")
+    }.filterNot(_.getFileName.toString == skip)
       .flatMap { (f: Path) =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(needle) => s"$f:${i + 1}"
+          case (line, i) if needles.exists(line.contains) => s"$f:${i + 1}"
         }
       }
-    assert(hits.isEmpty, hits.mkString("\n"))
+
+  test("no session is built outside GraftSession") {
+    val found = hits(Seq("src/main/scala", "src/test/scala"),
+      Seq("SparkSession" + ".builder"), skip = "GraftSession.scala") // not a hit in this file
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("src/main re-registers none of the extension's functions on a running session") {
+    val found = hits(Seq("src/main/scala"),
+      Seq("GraftExtensions", "IntersectFunctions").map(_ + ".register("))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("a new session resolves sorted_intersect from the extension alone") {
+    val s = TestSpark.spark.newSession()
+    val got = s.sql("SELECT sorted_intersect(array(1L, 3L, 5L), array(3L, 5L, 7L))")
+      .collect()(0).getSeq[Long](0)
+    assert(got == Seq(3L, 5L))
   }
 
   test("the test session carries every GraftSession setting it does not override") {

@@ -325,7 +325,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("sorted_intersect: equals array_intersect on sorted dup-free arrays, both types") {
-    graft.functions.IntersectFunctions.register(extSpark)
+    graft.GraftExtensions.register(extSpark)
     import org.apache.spark.sql.functions.{array_intersect, col, sort_array}
     import extSpark.implicits._
     val longs = Seq(

@@ -260,6 +260,79 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(setOf(posArts, "^hey") == Set(emails1))
   }
 
+  /** SQLite FTS5's bm25() for `term` (k1 = 1.2, b = 0.75, weights 1.0)
+    * in every doc of `toks` holding it, under `toks`'s own
+    * [[TextIndex.stats]], keyed "type:key".
+    */
+  private def fts5Scores(toks: DataFrame, term: String): Map[String, Double] = {
+    val s = TextIndex.stats(toks).collect()(0)
+    val (n, avgdl) = (s.getAs[Double]("n_docs"), s.getAs[Double]("avgdl"))
+    val docs = toks.collect().map { r =>
+      val tokens = r.getAs[scala.collection.Seq[String]]("tokens_title") ++
+        r.getAs[scala.collection.Seq[String]]("tokens_s1")
+      (r.getAs[String]("type") + ":" + r.getAs[String]("key"), tokens.count(_ == term).toDouble,
+        (r.getAs[Int]("dl_title") + r.getAs[Int]("dl_s1")).toDouble)
+    }
+    val df = docs.count(_._2 > 0)
+    val idf = math.max(math.log((n - df + 0.5) / (df + 0.5)), 1e-6)
+    docs.collect { case (id, f, dl) if f > 0 =>
+      id -> idf * f * 2.2 / (f + 1.2 * (0.25 + 0.75 * dl / avgdl))
+    }.toMap
+  }
+
+  /** `n` notes; every tenth (and the first) mentions apples. */
+  private def notes(n: Int): DataFrame = {
+    import spark.implicits._
+    (1 to n).map(i => (i, s"note $i", f"2020-01-01T00:00:$i%02d",
+      if (i % 10 == 1) "apple pie and apple tart" else s"pear number $i"))
+      .toDF("id", "title", "created", "body")
+  }
+
+  private def scoresOf(index: DataFrame, arts: SearchEngine.TextArtifacts): Map[String, Double] =
+    SearchEngine.search(spark, index, Request(q = Some("apple"), tokenize = Tokenize.Porter),
+      Some(arts)).collect()
+      .map(r => r.getAs[String]("type") + ":" + r.getAs[String]("key") -> r.getAs[Double]("score"))
+      .toMap
+
+  private def assertFts5(got: Map[String, Double], want: Map[String, Double]): Unit = {
+    assert(got.keySet == want.keySet)
+    want.foreach { case (id, w) => assert(math.abs(got(id) - w) < 1e-4, s"$id: ${got(id)} vs $w") }
+  }
+
+  test("BM25 statistics belong to the artifact set: corpora of one schema do not share them") {
+    def corpus(n: Int) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-bm25-corpus").toString
+      graft.core.Schema.conform(notes(n).select(lit("t/notes").as("type"),
+        col("id").as("key"), col("title"), col("created").as("timestamp"),
+        col("body").as("search_1"))).write.parquet(s"$dir/index")
+      val index = spark.read.parquet(s"$dir/index")
+      (index, SearchEngine.TextArtifacts.build(TextIndex.docTokens(index, Tokenize.Porter)))
+    }
+    for (n <- Seq(2, 40)) {
+      val (index, arts) = corpus(n)
+      assertFts5(scoresOf(index, arts), fts5Scores(arts.docTokens, "appl"))
+    }
+  }
+
+  test("a re-indexed directory, reopened, scores with its new statistics") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-reindex").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/notes.yml"),
+      """notes.db:
+        |    notes:
+        |        sql: |-
+        |            select id as key, title, created as timestamp, body as search_1
+        |            from bm25_notes
+        |""".stripMargin)
+    for (n <- Seq(2, 40)) {
+      notes(n).write.parquet(s"$dir/notes_$n.parquet")
+      graft.IndexCli.run(spark, s"$dir/idx", s"$dir/notes.yml",
+        Map("bm25_notes" -> s"$dir/notes_$n.parquet"), Tokenize.Porter, None)
+      val arts = graft.Cli.textArtifacts(spark, s"$dir/idx")
+      assertFts5(scoresOf(spark.read.parquet(s"$dir/idx/search_index"), arts),
+        fts5Scores(arts.docTokens, "appl"))
+    }
+  }
+
   test("BM25 ranks rarer term higher (relevance order)") {
     // 'dogfest' appears once; docs sort by score desc
     val scored = search("things").select("score").collect().map(_.getDouble(0))
