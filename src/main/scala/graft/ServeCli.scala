@@ -18,6 +18,13 @@ import java.nio.file.{Files, Paths}
   * `<configPath>` is the same rules config given to IndexCli (needed
   * for display templates + `display_sql` enrichment); `--source` views
   * back any `display_sql` that reads source tables.
+  *
+  * Pages are served concurrently on [[BetaServer]]'s request pool: as
+  * many threads as the session's `defaultParallelism` (the `nproc` of
+  * a local session) and room for 4× that many waiting requests. A
+  * request past that bound has its connection closed by the JDK
+  * dispatcher, with no response. Every Spark job of a page runs under
+  * the request's job group `beta-<n>`, described by its query string.
   */
 object ServeCli {
 

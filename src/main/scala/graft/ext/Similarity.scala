@@ -40,7 +40,6 @@ object Similarity {
 
   /** The query vector for a given id (collected to the driver: one row). */
   def vectorOf(vectors: DataFrame, idCol: String, id: Long): Seq[Float] = {
-    VectorFunctions.register(vectors.sparkSession)
     vectors.filter(col(idCol) === id).select("embedding")
       .collect()(0).getSeq[Float](0)
   }
@@ -48,7 +47,6 @@ object Similarity {
   /** Brute-force cosine top-k against a literal query vector. */
   def bruteForceTopK(vectors: DataFrame, query: Seq[Float], k: Int,
       idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val q = array(query.map(v => lit(v)): _*)
     vectors
       .withColumn("cos_sim", round(cosine(col("embedding"), q), 6))
@@ -74,7 +72,6 @@ object Similarity {
   def matryoshkaRecall(vectors: DataFrame, queryEvery: Long = 97,
       prefixDim: Int = 16, k: Int = 10,
       benchMaxId: Long = Long.MaxValue): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val qs = vectors.filter(pmod(col("vec_id"), lit(queryEvery)) === 0 &&
       col("vec_id") < benchMaxId)
       .select(col("vec_id").as("qid"), col("embedding").as("q"))
@@ -135,7 +132,6 @@ object Similarity {
     */
   def binaryRecall(vectors: DataFrame, queryEvery: Long = 97,
       k: Int = 10, benchMaxId: Long = Long.MaxValue): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val coded = vectors.select(col("vec_id"), col("embedding"),
       binaryCode(col("embedding")).as("code"))
     val qs = coded.filter(pmod(col("vec_id"), lit(queryEvery)) === 0 &&
@@ -178,7 +174,6 @@ object Similarity {
 
   def ivfAssign(vectors: DataFrame, sampleEvery: Int,
       idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val withNorm = vectors.withColumn("__vn", dot(col("embedding"), col("embedding")))
     val centroids = withNorm.filter(col(idCol) % sampleEvery === 0)
       .select(col(idCol).as("cell_id"), col("embedding").as("centroid"),
@@ -205,7 +200,6 @@ object Similarity {
     */
   def assignToCentroids(vectors: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val withNorm = vectors.withColumn("__vn",
       dot(col("embedding"), col("embedding")))
     val cents = centroids.select(col("cell_id"), col("centroid"))
@@ -235,7 +229,6 @@ object Similarity {
     */
   def ivfBuild(vectors: DataFrame, sampleEvery: Int,
       idCol: String = "vec_id"): IvfIndex = {
-    VectorFunctions.register(vectors.sparkSession)
     val centroids = vectors.filter(col(idCol) % sampleEvery === 0)
       .select(col(idCol).as("cell_id"), col("embedding").as("centroid"))
     val assigned = ivfAssign(vectors, sampleEvery, idCol)
@@ -249,7 +242,6 @@ object Similarity {
     */
   def ivfSearchIndexed(index: IvfIndex, query: Seq[Float], nprobe: Int,
       k: Int): DataFrame = {
-    VectorFunctions.register(index.assigned.sparkSession)
     val q = array(query.map(v => lit(v)): _*)
     val probeCells = index.centroids
       .withColumn("sim", round(cosine(col("centroid"), q), 6))
@@ -298,7 +290,6 @@ object Similarity {
     */
   def ivfSearchPersisted(spark: SparkSession, dir: String, query: Seq[Float],
       nprobe: Int, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val idx = readIvfIndex(spark, dir)
     val q = array(query.map(v => lit(v)): _*)
     val probeCells = idx.centroids
@@ -327,7 +318,6 @@ object Similarity {
     */
   def kmeansCentroids(vectors: DataFrame, sampleEvery: Int, iters: Int,
       idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val embD = transform(col("embedding"), x => x.cast("double"))
     def dotD(a: Column, b: Column): Column = VectorFunctions.dot_d(a, b)
     val vecs = spread(vectors.select(col(idCol).as("vec_id"), embD.as("ve")))
@@ -379,7 +369,6 @@ object Similarity {
     */
   def kmeansIvfBuild(vectors: DataFrame, sampleEvery: Int, iters: Int,
       idCol: String = "vec_id"): IvfIndex = {
-    VectorFunctions.register(vectors.sparkSession)
     def dotD(a: Column, b: Column): Column = VectorFunctions.dot_d(a, b)
     val embD = transform(col("embedding"), x => x.cast("double"))
     val vecs = spread(vectors.select(col(idCol).as("vec_id"), embD.as("ve")))
@@ -398,7 +387,6 @@ object Similarity {
     */
   def kmeansIvfSearchIndexed(index: IvfIndex, query: Seq[Float], nprobe: Int,
       k: Int): DataFrame = {
-    VectorFunctions.register(index.assigned.sparkSession)
     def dotD(a: Column, b: Column): Column = VectorFunctions.dot_d(a, b)
     val qD = array(query.map(v => lit(v.toDouble)): _*)
     val probeCells = index.centroids
@@ -434,7 +422,6 @@ object Similarity {
     */
   def cosineNearDupPairs(vectors: DataFrame, blockCol: String,
       threshold: Double, idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val withNorm = vectors
       .withColumn("__n", dot(col("embedding"), col("embedding")))
     val a = withNorm.select(col(blockCol).as("blk"), col(idCol).as("id_a"),
@@ -472,7 +459,6 @@ object Similarity {
       idCol: String = "vec_id"): DataFrame = {
     require(k > 0, s"knnGraph: k must be positive, got $k")
     val spark = assigned.sparkSession
-    VectorFunctions.register(spark)
     graft.functions.TopKFunctions.register(spark)
     val withNorm = assigned
       .withColumn("__n", dot(col("embedding"), col("embedding")))
@@ -557,7 +543,6 @@ object Similarity {
     * partial argmaxes, no Window.
     */
   def cellMedoids(index: IvfIndex): DataFrame = {
-    VectorFunctions.register(index.assigned.sparkSession)
     index.assigned
       .join(broadcast(index.centroids.select(col("cell_id"), col("centroid"))),
         "cell_id")
@@ -611,7 +596,6 @@ object Similarity {
   def crossSetNearPairs(vectors: DataFrame, isBench: Column,
       blockCol: String, threshold: Double,
       idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val withNorm = vectors
       .withColumn("__n", dot(col("embedding"), col("embedding")))
     val corp = withNorm.filter(!isBench).select(col(blockCol).as("blk"),
@@ -649,7 +633,6 @@ object Similarity {
     */
   def hardNegatives(vectors: DataFrame, queryEvery: Long = 97, k: Int = 5,
       benchMaxId: Long = Long.MaxValue): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     graft.functions.TopKFunctions.register(vectors.sparkSession)
     val qs = vectors
       .filter(pmod(col("vec_id"), lit(queryEvery)) === 0 &&
@@ -1192,7 +1175,6 @@ object Similarity {
     */
   def lshBuild(vectors: DataFrame, planes: Int,
       idCol: String = "vec_id", dim0: Option[Int] = None): LshIndex = {
-    VectorFunctions.register(vectors.sparkSession)
     val dim = dim0.getOrElse(
       vectors.select("embedding").head().getSeq[Float](0).size)
     val hps = hyperplanes(planes, dim)
@@ -1240,7 +1222,6 @@ object Similarity {
     */
   def lshSearchIndexed(index: LshIndex, query: Seq[Float], k: Int,
       probes: Int = 1, idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(index.signatures.sparkSession)
     val buckets = probeBuckets(index.planes, query, probes)
     val qi = query.map(quantE6)
     val qCol = array(qi.map(lit): _*)
@@ -1334,7 +1315,6 @@ object Similarity {
     */
   def pqBuild(vectors: DataFrame, m: Int, ks: Int,
       idCol: String = "vec_id"): PqIndex = {
-    VectorFunctions.register(vectors.sparkSession)
     val cbRows = vectors.filter(col(idCol) < ks)
       .select(col(idCol).cast("long").as("code"), embE6.as("e"))
       .collect()
@@ -1424,7 +1404,6 @@ object Similarity {
   def ivfPqSearch(cells: DataFrame, centroids: DataFrame,
       codebook: Seq[Seq[Seq[Long]]], m: Int, query: Seq[Float],
       nprobe: Int, k: Int): DataFrame = {
-    VectorFunctions.register(cells.sparkSession)
     val q = array(query.map(v => lit(v)): _*)
     val probeCells = centroids
       .withColumn("sim", round(cosine(col("centroid"), q), 6))

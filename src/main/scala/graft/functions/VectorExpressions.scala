@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -133,32 +133,18 @@ case class DotProductDouble(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column API. Functions land in the session's
-  * FunctionRegistry, so user extraction SQL can call them directly
+/** Column API over `dot_product_f` / `dot_product_d`. The functions
+  * come with [[graft.GraftExtensions]], so every session the engine
+  * builds resolves them, and user extraction SQL can call them directly
   * (`SELECT dot_product_f(embedding, q) ...`) — the engine's function
   * surface composes with the arbitrary-user-SQL contract.
   */
 object VectorFunctions {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product_f",
-      exprs => DotProductFloat(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product_d",
-      exprs => DotProductDouble(exprs(0), exprs(1)),
-      "built-in")
-  }
-
-  /** Column API: double-precision dot product of two float arrays
-    * (requires [[register]] on the session).
-    */
+  /** Column API: double-precision dot product of two float arrays. */
   def dot_f(a: Column, b: Column): Column = call_function("dot_product_f", a, b)
 
-  /** Column API: dot product of two double arrays (requires
-    * [[register]] on the session).
-    */
+  /** Column API: dot product of two double arrays. */
   def dot_d(a: Column, b: Column): Column = call_function("dot_product_d", a, b)
 
   /** Cosine similarity built on the codegen'd dot product. */

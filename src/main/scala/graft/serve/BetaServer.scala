@@ -7,6 +7,9 @@ import graft.text.Tokenize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
+import java.util.Locale
+import java.util.concurrent.{ArrayBlockingQueue, ThreadFactory, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** The `/-/beta` HTTP route (reference dogsheep_beta/__init__.py:261-263
   * `register_routes`) on the JDK's built-in [[HttpServer]] — no
@@ -25,7 +28,17 @@ import java.nio.charset.StandardCharsets
   * registers no temp view and no function (the engine's functions come
   * with the session extension), enrichment runs over the page's own
   * rows, and `q` reaches `display_sql` only as a bound `:q` parameter.
-  * The JDK server still handles one request at a time.
+  *
+  * Requests run on a bounded pool ([[requestPool]]) of as many threads
+  * as the session's `defaultParallelism`, so one page's driver-side
+  * planning and scheduling overlaps another page's Spark jobs instead
+  * of queueing behind the server's one dispatcher thread. At most 4×
+  * that many accepted requests wait for a thread; past that the JDK
+  * dispatcher closes the connection and no handler runs (the executor
+  * never sees the `HttpExchange`, so no 503 can be sent from there).
+  * Each request runs under its own Spark job group `beta-<n>`, whose
+  * description is the raw query string: every job of a page carries
+  * its request's tag.
   */
 object BetaServer {
 
@@ -64,32 +77,76 @@ object BetaServer {
     tokenize = tokenize,
     rawMode = params.get("_searchmode").contains("raw"))
 
+  /** Requests that may wait for a pool thread, per pool thread. */
+  private val QueuePerThread = 4
+
+  /** Numbers the job group of each request served in this JVM. */
+  private val requestSeq = new AtomicLong
+
+  /** The request pool: `threads` daemon threads named `beta-serve-<n>`
+    * that time out when idle, and a queue of `QueuePerThread × threads`
+    * requests. A full queue rejects; the JDK dispatcher then closes the
+    * connection. The pool outlives `server.stop`, but its threads are
+    * daemons and exit once idle, so they never keep the JVM alive.
+    */
+  private def requestPool(threads: Int): ThreadPoolExecutor = {
+    val n = new AtomicInteger
+    val factory: ThreadFactory = (r: Runnable) => {
+      val t = new Thread(r, s"beta-serve-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+    val pool = new ThreadPoolExecutor(threads, threads, 30L, TimeUnit.SECONDS,
+      new ArrayBlockingQueue[Runnable](QueuePerThread * threads), factory)
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
   /** Start serving `/-/beta` over a built index. `port = 0` binds an
     * ephemeral port (tests); read it back from
     * `server.getAddress.getPort`. Caller owns shutdown via
     * `server.stop(0)`.
+    *
+    * Each 200 response carries `Server-Timing: assemble;dur=<ms>,
+    * render;dur=<ms>`: the page assembly (every Spark job of the page)
+    * and the HTML rendering, in milliseconds.
     */
   def start(spark: SparkSession, index: DataFrame, rules: Seq[IndexRule],
       arts: Option[TextArtifacts] = None, port: Int = 8001,
       tokenize: Tokenize.Value = Tokenize.Porter,
       templateDebug: Boolean = false): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
+    val sc = spark.sparkContext
     server.createContext("/-/beta", new HttpHandler {
       override def handle(ex: HttpExchange): Unit =
         try {
-          val params = parseQuery(ex.getRequestURI.getRawQuery)
+          val raw = ex.getRequestURI.getRawQuery
+          sc.setJobGroup(s"beta-${requestSeq.incrementAndGet()}",
+            Option(raw).getOrElse(""), interruptOnCancel = false)
+          val t0 = System.nanoTime()
           val page = SearchPage.assemble(spark, index, rules,
-            toRequest(params, tokenize), arts, templateDebug = templateDebug)
-          respond(ex, 200, BetaHtml.render(page))
+            toRequest(parseQuery(raw), tokenize), arts, templateDebug = templateDebug)
+          val t1 = System.nanoTime()
+          val html = BetaHtml.render(page)
+          val t2 = System.nanoTime()
+          ex.getResponseHeaders.set("Server-Timing",
+            s"assemble;dur=${millis(t1 - t0)}, render;dur=${millis(t2 - t1)}")
+          respond(ex, 200, html)
         } catch {
           case e: Exception =>
             respond(ex, 500, "<h1>500</h1><pre>" +
               DisplayTemplate.escapeHtml(String.valueOf(e.getMessage)) + "</pre>")
-        } finally ex.close()
+        } finally {
+          sc.clearJobGroup()
+          ex.close()
+        }
     })
+    server.setExecutor(requestPool(sc.defaultParallelism))
     server.start()
     server
   }
+
+  private def millis(nanos: Long): String = "%.3f".formatLocal(Locale.ROOT, nanos / 1e6)
 
   private def respond(ex: HttpExchange, code: Int, html: String): Unit = {
     val bytes = html.getBytes(StandardCharsets.UTF_8)

@@ -31,7 +31,7 @@ class SessionSpec extends AnyFunSuite {
 
   test("src/main re-registers none of the extension's functions on a running session") {
     val found = hits(Seq("src/main/scala"),
-      Seq("GraftExtensions", "IntersectFunctions").map(_ + ".register("))
+      Seq("GraftExtensions", "IntersectFunctions", "VectorFunctions").map(_ + ".register("))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -1001,7 +1001,6 @@ class ExtSpec extends AnyFunSuite {
     import graft.functions.VectorFunctions
     import org.apache.spark.sql.functions.{aggregate, zip_with, lit}
     import spark.implicits._
-    VectorFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (1 to 50).map(_ =>
       ((1 to 64).map(_ => rnd.nextDouble() * 2 - 1),

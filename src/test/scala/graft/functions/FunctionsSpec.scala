@@ -24,7 +24,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("dot_product_f matches a hand-computed double fold") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1f, 2f, 3f), Array(0.5f, -1f, 2f))).toDF("a", "b")
     val got = df.select(VectorFunctions.dot_f($"a", $"b")).collect()(0).getDouble(0)
@@ -33,7 +32,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("dot_product_f rejects non-float-array inputs at analysis") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0))).toDF("a", "b")
     intercept[Exception](df.select(VectorFunctions.dot_f($"a", $"b")).collect())

@@ -4,9 +4,12 @@ import graft.{RefFixtures, TestSpark}
 import graft.index.IndexJob
 import graft.query.SearchEngine.Request
 import graft.text.Tokenize
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import java.net.{HttpURLConnection, URI}
+import java.util.concurrent.{ConcurrentHashMap, Executors}
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 /** The `/-/beta` serving shell: HTML rendering of the assembled page
   * (reference templates/beta.html:38-92) and a live HTTP round-trip on
@@ -29,6 +32,20 @@ class BetaServerSpec extends AnyFunSuite {
     conn.disconnect()
     (code, body)
   }
+
+  /** The eight request shapes of the 8-GET test, reused by the 64-GET one. */
+  private val shapes = Seq(
+    Map("q" -> "things"),
+    Map("q" -> "things", "is_public" -> "0"),
+    Map("q" -> "\"email about things\""),
+    Map("q" -> "email", "sort" -> "oldest"),
+    Map("type" -> "github.db/commits"),
+    Map("q" -> "things NOT email", "category" -> "1"),
+    Map("q" -> "thing*", "timestamp__date" -> "2020-08-02"),
+    Map("q" -> "another OR tests", "sort" -> "newest"))
+
+  private def query(p: Map[String, String]) = p.map { case (k, v) =>
+    s"$k=${java.net.URLEncoder.encode(v, "UTF-8")}" }.mkString("&")
 
   test("render: count line, form state, facets, and |safe result output") {
     val page = SearchPage.assemble(spark, index, RefFixtures.pluginRules,
@@ -167,6 +184,95 @@ class BetaServerSpec extends AnyFunSuite {
       // the Leaflet map shortcut ships on every page (beta.html:92-145)
       assert(body.contains("data-map-latitude") &&
         body.contains("unpkg.com/leaflet@1.5.1"))
+    } finally server.stop(0)
+  }
+
+  test("64 GETs from 8 clients overlap their Spark jobs, one job group per request") {
+    // job id -> (start ms, job group) and job id -> end ms, from the
+    // scheduler's own event times
+    val starts = new ConcurrentHashMap[Int, (Long, String)]
+    val ends = new ConcurrentHashMap[Int, Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(e.jobId, (e.time, Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+    }
+    def tables = spark.catalog.listTables().collect()
+      .map(t => (t.name, t.isTemporary)).sorted.toSeq
+    def functions = spark.catalog.listFunctions().collect()
+      .map(f => (f.name, f.className, f.isTemporary)).sorted.toSeq
+    val before = (tables, spark.conf.getAll, functions)
+    val server = BetaServer.start(spark, index, RefFixtures.pluginRules,
+      port = 0, tokenize = Tokenize.Porter)
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      val base = s"http://localhost:${server.getAddress.getPort}/-/beta?"
+      val requests = Seq.tabulate(64)(i => shapes(i % shapes.size))
+      val clients = Executors.newFixedThreadPool(8)
+      try requests.map(p => clients.submit(() => p -> get(base + query(p)))).map(_.get())
+      finally clients.shutdown()
+    } finally server.stop(0)
+    // the listener bus delivers in order: once this job's end is seen,
+    // every event of the burst has been delivered
+    spark.sparkContext.setJobGroup("burst-marker", "", interruptOnCancel = false)
+    try spark.range(1).collect() finally spark.sparkContext.clearJobGroup()
+    def delivered = starts.asScala.exists { case (id, (_, g)) =>
+      g == "burst-marker" && ends.containsKey(id) }
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!delivered && System.nanoTime() < deadline) Thread.sleep(20)
+    spark.sparkContext.removeSparkListener(listener)
+    assert(delivered, "listener bus did not drain")
+
+    val expected = shapes.map(p => p -> BetaHtml.render(SearchPage.assemble(spark, index,
+      RefFixtures.pluginRules, BetaServer.toRequest(p, Tokenize.Porter)))).toMap
+    got.foreach { case (p, (code, body)) =>
+      assert(code == 200, s"$p: ${body.take(1500)}")
+      assert(body == expected(p), p.toString)
+    }
+
+    val jobs = starts.asScala.toSeq.collect { case (id, (t0, g)) if g != "burst-marker" =>
+      (id, t0, ends.asScala.getOrElse(id, Long.MaxValue), g) }
+    assert(jobs.nonEmpty && jobs.forall(_._3 < Long.MaxValue), "a job never ended")
+    val untagged = jobs.filterNot(j => j._4 != null && j._4.startsWith("beta-"))
+    assert(untagged.isEmpty,
+      s"${untagged.size} of ${jobs.size} jobs outside a request's group, e.g. ${untagged.take(3)}")
+    assert(jobs.map(_._4).distinct.size == 64)
+    // at some instant two requests' jobs run at once
+    val overlap = jobs.exists { a => jobs.exists { b =>
+      a._4 != b._4 && a._2 < b._3 && b._2 < a._3 } }
+    assert(overlap, "no two requests had a Spark job running at the same time")
+    assert((tables, spark.conf.getAll, functions) == before)
+  }
+
+  test("the request pool's threads are daemons once the server stops") {
+    val server = BetaServer.start(spark, index, RefFixtures.pluginRules,
+      port = 0, tokenize = Tokenize.Porter)
+    try {
+      val (code, _) = get(s"http://localhost:${server.getAddress.getPort}/-/beta?q=things")
+      assert(code == 200)
+    } finally server.stop(0)
+    val pool = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("beta-serve-"))
+    assert(pool.nonEmpty, "the request ran on no beta-serve thread")
+    assert(pool.forall(_.isDaemon), pool.filterNot(_.isDaemon).map(_.getName))
+  }
+
+  test("a 200 response carries Server-Timing for assembly and rendering") {
+    val server = BetaServer.start(spark, index, RefFixtures.pluginRules,
+      port = 0, tokenize = Tokenize.Porter)
+    try {
+      val conn = URI.create(s"http://localhost:${server.getAddress.getPort}/-/beta?q=things")
+        .toURL.openConnection().asInstanceOf[HttpURLConnection]
+      try {
+        assert(conn.getResponseCode == 200)
+        val timing = conn.getHeaderField("Server-Timing")
+        val Timing = """assemble;dur=([0-9.]+), render;dur=([0-9.]+)""".r
+        timing match {
+          case Timing(assemble, render) =>
+            assert(assemble.toDouble >= 0 && render.toDouble >= 0, timing)
+          case other => fail(s"Server-Timing: $other")
+        }
+      } finally conn.disconnect()
     } finally server.stop(0)
   }
 }
