@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.IndexJob
 import graft.query.SearchEngine.TextArtifacts
 import org.apache.spark.sql.SparkSession
 
@@ -9,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Cli {
 
-  /** The text artifacts an [[IndexCli]] run writes under `indexDir`.
+  /** The text artifacts an [[IndexCli]] run writes under `indexDir`
+    * (a local path or a Hadoop filesystem URI).
     * Positions are optional (index dirs written before they existed):
     * when absent, phrase, `^` and NEAR derive them from `doc_tokens`.
     */
@@ -18,6 +20,6 @@ object Cli {
     TextArtifacts(
       spark.read.parquet(s"$indexDir/doc_tokens"),
       spark.read.parquet(s"$indexDir/postings"),
-      Option.when(new java.io.File(positions).exists())(spark.read.parquet(positions)))
+      Option.when(IndexJob.pathExists(spark, positions))(spark.read.parquet(positions)))
   }
 }

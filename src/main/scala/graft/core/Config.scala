@@ -1,6 +1,10 @@
 package graft.core
 
-import scala.collection.mutable
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import org.yaml.snakeyaml.{LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Indexing configuration: which SQL to run against which source to
   * produce documents of which type.
@@ -8,8 +12,15 @@ import scala.collection.mutable
   * Mirrors the reference's YAML/JSON rules file
   * `{db_name: {doc_type: {sql, display, display_sql}}}`
   * (reference dogsheep_beta/utils.py:104-112, README.md:30-48).
-  * JSON is tried first, YAML as fallback, and an unparseable document
-  * raises [[BadMetadataError]] — same contract as `parse_metadata`.
+  * JSON is tried first (Jackson), YAML as fallback (SnakeYAML, the Java
+  * port of the reference's PyYAML, so YAML 1.1 and `yaml.safe_load`
+  * semantics: comments, escapes, folded and multi-line scalars, anchors,
+  * aliases and `<<` merge keys). An unparseable document raises
+  * [[BadMetadataError]] — same contract as `parse_metadata`.
+  *
+  * A `sql`, `display_sql` or `display` value that starts with `{` or `[`
+  * must be quoted or written as a `|` block: unquoted, YAML reads
+  * `display: {{ display.x }}` as a flow mapping, which is rejected.
   */
 final case class IndexRule(
     db: String,
@@ -26,432 +37,46 @@ class BadMetadataError(msg: String) extends RuntimeException(msg)
 
 object Config {
 
-  /** Parse a config document (JSON first, YAML-subset fallback —
-    * reference utils.py:104-112). Returns rules in document order.
+  private val json =
+    new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** Parse a config document (JSON first, YAML fallback — reference
+    * utils.py:104-112). Returns rules in document order.
     */
   def parseMetadata(content: String): Seq[IndexRule] = {
-    val tree: Map[String, Any] =
-      try parseJsonObject(content)
+    val tree: Any =
+      try json.readValue(content, classOf[Object])
       catch {
-        case _: Exception =>
-          try MiniYaml.parse(content)
+        case NonFatal(_) =>
+          try new Yaml(new SafeConstructor(new LoaderOptions())).load[Object](content)
           catch {
-            case e: Exception =>
+            case NonFatal(e) =>
               throw new BadMetadataError(
                 s"Metadata is neither valid JSON nor valid YAML: ${e.getMessage}")
           }
       }
-    toRules(tree)
-  }
-
-  private def toRules(tree: Map[String, Any]): Seq[IndexRule] =
-    tree.toSeq.flatMap {
-      case (db, types: Map[_, _]) =>
-        types.asInstanceOf[Map[String, Any]].toSeq.map {
-          case (typ, spec: Map[_, _]) =>
-            val m = spec.asInstanceOf[Map[String, Any]]
-            IndexRule(
-              db = db,
-              docType = typ,
-              sql = m.getOrElse("sql",
-                throw new BadMetadataError(s"$db/$typ missing sql")).toString,
-              displaySql = m.get("display_sql").map(_.toString),
-              display = m.get("display").map(_.toString)
-            )
-          case (typ, other) =>
-            throw new BadMetadataError(s"$db/$typ: expected mapping, got $other")
-        }
-      case (db, other) =>
-        throw new BadMetadataError(s"$db: expected mapping, got $other")
-    }
-
-  // ---- JSON (minimal, no deps; objects/strings only is all the config
-  // shape needs, but we support the full scalar set) -------------------
-
-  def parseJsonObject(s: String): Map[String, Any] = {
-    val p = new JsonParser(s)
-    val v = p.parseValue()
-    p.skipWs()
-    if (!p.atEnd) throw new BadMetadataError("trailing JSON content")
-    v match {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-      case _            => throw new BadMetadataError("top-level JSON must be an object")
-    }
-  }
-
-  private final class JsonParser(s: String) {
-    private var i = 0
-    def atEnd: Boolean = i >= s.length
-    def skipWs(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    private def fail(msg: String) =
-      throw new BadMetadataError(s"JSON parse error at $i: $msg")
-    def parseValue(): Any = {
-      skipWs()
-      if (atEnd) fail("unexpected end")
-      s.charAt(i) match {
-        case '{' => parseObject()
-        case '[' => parseArray()
-        case '"' => parseString()
-        case 't' => expect("true"); true
-        case 'f' => expect("false"); false
-        case 'n' => expect("null"); null
-        case _   => parseNumber()
+    for {
+      (db, types) <- mapping(tree, "top level")
+      (typ, spec) <- mapping(types, db)
+    } yield {
+      val m = mapping(spec, s"$db/$typ").toMap
+      def field(k: String): Option[String] = m.get(k).flatMap {
+        case null => None
+        case v @ (_: java.util.Map[_, _] | _: java.util.List[_]) =>
+          throw new BadMetadataError(
+            s"$db/$typ: $k must be a string, got $v; quote a value that starts with { or [")
+        case v => Some(String.valueOf(v))
       }
-    }
-    private def expect(lit: String): Unit = {
-      if (!s.startsWith(lit, i)) fail(s"expected $lit")
-      i += lit.length
-    }
-    private def parseObject(): Map[String, Any] = {
-      i += 1; skipWs()
-      val m = mutable.LinkedHashMap.empty[String, Any]
-      if (!atEnd && s.charAt(i) == '}') { i += 1; return m.toMap }
-      while (true) {
-        skipWs()
-        val k = parseString()
-        skipWs()
-        if (atEnd || s.charAt(i) != ':') fail("expected :")
-        i += 1
-        m(k) = parseValue()
-        skipWs()
-        if (atEnd) fail("unterminated object")
-        s.charAt(i) match {
-          case ',' => i += 1
-          case '}' => i += 1; return m.toMap
-          case c   => fail(s"unexpected '$c'")
-        }
-      }
-      m.toMap
-    }
-    private def parseArray(): Seq[Any] = {
-      i += 1; skipWs()
-      val b = mutable.ArrayBuffer.empty[Any]
-      if (!atEnd && s.charAt(i) == ']') { i += 1; return b.toSeq }
-      while (true) {
-        b += parseValue()
-        skipWs()
-        if (atEnd) fail("unterminated array")
-        s.charAt(i) match {
-          case ',' => i += 1
-          case ']' => i += 1; return b.toSeq
-          case c   => fail(s"unexpected '$c'")
-        }
-      }
-      b.toSeq
-    }
-    private def parseString(): String = {
-      if (s.charAt(i) != '"') fail("expected string")
-      i += 1
-      val sb = new StringBuilder
-      while (i < s.length && s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
-          i += 1
-          if (atEnd) fail("bad escape")
-          s.charAt(i) match {
-            case '"'  => sb += '"'
-            case '\\' => sb += '\\'
-            case '/'  => sb += '/'
-            case 'b'  => sb += '\b'
-            case 'f'  => sb += '\f'
-            case 'n'  => sb += '\n'
-            case 'r'  => sb += '\r'
-            case 't'  => sb += '\t'
-            case 'u' =>
-              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case e => fail(s"bad escape \\$e")
-          }
-        } else sb += c
-        i += 1
-      }
-      if (atEnd) fail("unterminated string")
-      i += 1
-      sb.toString
-    }
-    private def parseNumber(): Any = {
-      val start = i
-      while (i < s.length && "+-0123456789.eE".indexOf(s.charAt(i)) >= 0) i += 1
-      val t = s.substring(start, i)
-      if (t.isEmpty) fail("expected value")
-      if (t.exists(c => c == '.' || c == 'e' || c == 'E')) t.toDouble else t.toLong
-    }
-  }
-}
-
-/** Minimal YAML-subset parser: indentation-nested mappings, scalar
-  * values, `|`/`|-` literal block scalars, block sequences (`- item`,
-  * including compact `- key: val` mappings), flow sequences
-  * (`[a, b, c]`, nestable), `#` comments, single/double quoted
-  * strings, and anchors/aliases/merge keys (`&a` / `*a` / `<<:` —
-  * the remaining `yaml.safe_load` surface; r4 verdict #7). Covers the
-  * config shapes the reference documents (README.md:30-48) — which
-  * PyYAML accepts via `yaml.safe_load` (reference utils.py:104-112) —
-  * without an external YAML dependency (zero-egress build). Sequences
-  * surface as `Seq[Any]`. Unknown aliases and non-mapping merge
-  * values fail with `BadMetadataError`, never silently.
-  */
-object MiniYaml {
-
-  def parse(content: String): Map[String, Any] = {
-    val all = content.linesIterator.toVector
-    val anchors = mutable.Map.empty[String, Any]
-    val (m, next) = parseMap(all, 0, 0, anchors)
-    if (m.isEmpty) throw new BadMetadataError("not a YAML mapping")
-    if (next < all.length && !all.drop(next).forall(isBlank))
-      throw new BadMetadataError(s"unparsed YAML content at line ${next + 1}")
-    m
-  }
-
-  private val anchorRe = """&([\w-]+)\s*(.*)""".r
-  private val aliasRe = """\*([\w-]+)\s*""".r
-
-  /** Split a leading `&name` off a value, returning (anchor?, rest). */
-  private def splitAnchor(v: String, lineNo: Int): (Option[String], String) =
-    v match {
-      case anchorRe(name, rest) => (Some(name), rest)
-      case _ if v.startsWith("&") =>
-        throw new BadMetadataError(s"malformed anchor at line $lineNo: $v")
-      case _ => (None, v)
-    }
-
-  private def resolveAlias(name: String, anchors: mutable.Map[String, Any],
-      lineNo: Int): Any =
-    anchors.getOrElse(name,
-      throw new BadMetadataError(s"unknown YAML alias '*$name' at line $lineNo"))
-
-  private def indentOf(l: String): Int = l.takeWhile(_ == ' ').length
-
-  private def isBlank(l: String): Boolean = {
-    val t = l.trim
-    t.isEmpty || t.startsWith("#")
-  }
-
-  /** Parse a mapping at indentation `ind` starting at line `from`;
-    * returns (map, nextLineIndex). `<<:` merge keys supply DEFAULTS:
-    * explicit keys in this mapping win over merged ones (YAML merge
-    * semantics), and with several merge sources the first wins.
-    */
-  private def parseMap(lines: Vector[String], from: Int, ind: Int,
-      anchors: mutable.Map[String, Any]): (Map[String, Any], Int) = {
-    val m = mutable.LinkedHashMap.empty[String, Any]
-    val merged = mutable.LinkedHashMap.empty[String, Any]
-    def mergeIn(v: Any, lineNo: Int): Unit = v match {
-      case sub: Map[_, _] =>
-        sub.asInstanceOf[Map[String, Any]].foreach { case (k, x) =>
-          if (!merged.contains(k)) merged(k) = x
-        }
-      case seq: Seq[_] => seq.foreach(x => mergeIn(x, lineNo))
-      case _ => throw new BadMetadataError(
-        s"'<<' merge value must be a mapping at line $lineNo")
-    }
-    def put(key: String, v: Any, lineNo: Int): Unit =
-      if (key == "<<") mergeIn(v, lineNo) else m(key) = v
-    var i = from
-    while (i < lines.length) {
-      val line = lines(i)
-      if (isBlank(line)) i += 1
-      else {
-        val li = indentOf(line)
-        if (li < ind) return ((merged ++ m).toMap, i)
-        if (li > ind)
-          throw new BadMetadataError(s"unexpected indent at line ${i + 1}")
-        val t = line.trim
-        val ci = findColon(t)
-        if (ci < 0) throw new BadMetadataError(s"expected 'key:' at line ${i + 1}")
-        val key = unquote(t.substring(0, ci).trim)
-        val (anchor, rest) = splitAnchor(t.substring(ci + 1).trim, i + 1)
-        def record(v: Any): Unit = {
-          anchor.foreach(a => anchors(a) = v)
-          put(key, v, i + 1)
-        }
-        if (rest.isEmpty) {
-          // nested mapping, block sequence, or empty value
-          var j = i + 1
-          while (j < lines.length && isBlank(lines(j))) j += 1
-          if (j < lines.length && indentOf(lines(j)) > ind) {
-            val subInd = indentOf(lines(j))
-            if (isSeqItem(lines(j))) {
-              val (seq, next) = parseSeq(lines, j, subInd, anchors)
-              record(seq)
-              i = next
-            } else {
-              val (sub, next) = parseMap(lines, j, subInd, anchors)
-              record(sub)
-              i = next
-            }
-          } else { record(null); i += 1 }
-        } else if (rest == "|" || rest == "|-" || rest == "|+") {
-          val (block, next) = parseBlock(lines, i + 1, ind, rest != "|-")
-          record(block)
-          i = next
-        } else if (rest.startsWith("[")) {
-          record(resolveFlowAliases(parseFlowSeq(rest, i + 1), anchors, i + 1))
-          i += 1
-        } else rest match {
-          case aliasRe(name) =>
-            record(resolveAlias(name, anchors, i + 1))
-            i += 1
-          case _ =>
-            record(unquote(rest))
-            i += 1
-        }
-      }
-    }
-    ((merged ++ m).toMap, i)
-  }
-
-  /** Resolve `*alias` items inside an already-parsed flow sequence
-    * (parseFlowSeq yields them as plain strings).
-    */
-  private def resolveFlowAliases(seq: Seq[Any],
-      anchors: mutable.Map[String, Any], lineNo: Int): Seq[Any] =
-    seq.map {
-      case s: String => s.trim match {
-        case aliasRe(name) => resolveAlias(name, anchors, lineNo)
-        case _ => s
-      }
-      case sub: Seq[_] => resolveFlowAliases(sub, anchors, lineNo)
-      case other => other
-    }
-
-  /** colon that terminates the key: first `: ` or line-final `:`,
-    * respecting quotes. */
-  private def findColon(t: String): Int = {
-    var i = 0
-    var inS = false; var inD = false
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      else if (c == ':' && !inS && !inD &&
-        (i == t.length - 1 || t.charAt(i + 1) == ' ')) return i
-      i += 1
-    }
-    -1
-  }
-
-  private def parseBlock(lines: Vector[String], from: Int, parentInd: Int,
-      keepFinalNewline: Boolean): (String, Int) = {
-    var i = from
-    // determine block indent from first non-blank line
-    var j = i
-    while (j < lines.length && lines(j).trim.isEmpty) j += 1
-    if (j >= lines.length || indentOf(lines(j)) <= parentInd)
-      return ("", i)
-    val bi = indentOf(lines(j))
-    val sb = mutable.ArrayBuffer.empty[String]
-    while (i < lines.length &&
-        (lines(i).trim.isEmpty || indentOf(lines(i)) >= bi)) {
-      val l = lines(i)
-      sb += (if (l.length >= bi) l.substring(bi) else "")
-      i += 1
-    }
-    // drop trailing blank lines; literal style keeps inner newlines
-    while (sb.nonEmpty && sb.last.trim.isEmpty) sb.remove(sb.length - 1)
-    val text = sb.mkString("\n") + (if (keepFinalNewline) "\n" else "")
-    (text, i)
-  }
-
-  private def isSeqItem(l: String): Boolean = {
-    val t = l.trim
-    t == "-" || t.startsWith("- ")
-  }
-
-  /** Parse a block sequence at indentation `ind` starting at `from`;
-    * items are scalars, flow sequences, nested block structures, or
-    * compact `- key: val` mappings (handled by re-parsing the item line
-    * with the dash blanked out — the mapping then sits at indent
-    * `ind + 2`, where its continuation lines already are).
-    */
-  private def parseSeq(lines: Vector[String], from: Int, ind: Int,
-      anchors: mutable.Map[String, Any]): (Seq[Any], Int) = {
-    val out = mutable.ArrayBuffer.empty[Any]
-    var i = from
-    while (i < lines.length) {
-      val line = lines(i)
-      if (isBlank(line)) i += 1
-      else {
-        val li = indentOf(line)
-        if (li < ind) return (out.toSeq, i)
-        if (li > ind || !isSeqItem(line))
-          throw new BadMetadataError(s"expected '- item' at line ${i + 1}")
-        val rawItem = line.trim.drop(1).trim
-        val (anchor, item) =
-          if (findColon(rawItem) >= 0) (None, rawItem) // compact mapping keeps its own line
-          else splitAnchor(rawItem, i + 1)
-        def record(v: Any): Unit = { anchor.foreach(a => anchors(a) = v); out += v }
-        if (item.isEmpty) {
-          // nested structure under a bare dash (or a bare `- &anchor`)
-          var j = i + 1
-          while (j < lines.length && isBlank(lines(j))) j += 1
-          if (j < lines.length && indentOf(lines(j)) > ind) {
-            val subInd = indentOf(lines(j))
-            val (v, next) =
-              if (isSeqItem(lines(j))) parseSeq(lines, j, subInd, anchors)
-              else parseMap(lines, j, subInd, anchors)
-            record(v)
-            i = next
-          } else { record(null); i += 1 }
-        } else if (item.startsWith("[")) {
-          record(resolveFlowAliases(parseFlowSeq(item, i + 1), anchors, i + 1))
-          i += 1
-        } else if (findColon(item) >= 0) {
-          // compact mapping: blank the dash, re-parse as a mapping whose
-          // first line sits at the item indent
-          val itemInd = li + (line.trim.length - item.length)
-          val patched = lines.updated(i, (" " * itemInd) + item)
-          val (sub, next) = parseMap(patched, i, itemInd, anchors)
-          out += sub
-          i = next
-        } else item match {
-          case aliasRe(name) =>
-            record(resolveAlias(name, anchors, i + 1))
-            i += 1
-          case _ =>
-            record(unquote(item))
-            i += 1
-        }
-      }
-    }
-    (out.toSeq, i)
-  }
-
-  /** Parse a single-line flow sequence `[a, b, [c, d], 'e, f']`;
-    * `lineNo` only feeds error messages.
-    */
-  private def parseFlowSeq(s: String, lineNo: Int): Seq[Any] = {
-    def fail(msg: String) =
-      throw new BadMetadataError(s"bad flow sequence at line $lineNo: $msg")
-    val t = s.trim
-    if (!t.startsWith("[") || !t.endsWith("]")) fail("expected [...]")
-    val inner = t.substring(1, t.length - 1)
-    // split on commas at bracket depth 0, outside quotes
-    val parts = mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var depth = 0; var inS = false; var inD = false
-    inner.foreach { c =>
-      if (c == '\'' && !inD) { inS = !inS; sb += c }
-      else if (c == '"' && !inS) { inD = !inD; sb += c }
-      else if (!inS && !inD && c == '[') { depth += 1; sb += c }
-      else if (!inS && !inD && c == ']') {
-        depth -= 1; if (depth < 0) fail("unbalanced ]"); sb += c
-      }
-      else if (!inS && !inD && depth == 0 && c == ',') {
-        parts += sb.toString; sb.clear()
-      }
-      else sb += c
-    }
-    if (depth != 0 || inS || inD) fail("unterminated nesting or quote")
-    if (sb.toString.trim.nonEmpty || parts.nonEmpty) parts += sb.toString
-    parts.toSeq.map(_.trim).filter(_.nonEmpty).map { p =>
-      if (p.startsWith("[")) parseFlowSeq(p, lineNo) else unquote(p)
+      IndexRule(db, typ,
+        field("sql").getOrElse(throw new BadMetadataError(s"$db/$typ missing sql")),
+        field("display_sql"), field("display"))
     }
   }
 
-  private def unquote(s: String): String =
-    if (s.length >= 2 && ((s.head == '"' && s.last == '"') ||
-        (s.head == '\'' && s.last == '\'')))
-      s.substring(1, s.length - 1)
-    else s
+  /** A parsed mapping's entries in document order, keys as strings. */
+  private def mapping(v: Any, where: String): Seq[(String, Any)] = v match {
+    case m: java.util.Map[_, _] =>
+      m.asScala.toSeq.map { case (k, x) => (String.valueOf(k), x) }
+    case other => throw new BadMetadataError(s"$where: expected mapping, got $other")
+  }
 }

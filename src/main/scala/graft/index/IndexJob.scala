@@ -121,7 +121,6 @@ object IndexJob {
     */
   def replaceInto(spark: SparkSession, indexPath: String,
       incoming: DataFrame): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val merged: DataFrame =
       if (pathExists(spark, indexPath)) {
         val types = incoming.select("type").distinct() // small: one row per rule
@@ -139,11 +138,15 @@ object IndexJob {
       .repartition(col("type"))
       .sortWithinPartitions(col("timestamp").desc_nulls_last)
       .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic") // this write only, not the session
       .partitionBy("type")
       .parquet(indexPath)
   }
 
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
+  /** Whether `p` exists on its Hadoop filesystem (a local path or a
+    * URI such as `file:/…` or `hdfs://…`).
+    */
+  private[graft] def pathExists(spark: SparkSession, p: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(p)
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }

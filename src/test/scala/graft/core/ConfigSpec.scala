@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Config parsing parity with the reference's `parse_metadata`
   * (reference dogsheep_beta/utils.py:104-112): JSON first, YAML
-  * fallback, BadMetadataError otherwise.
+  * fallback with `yaml.safe_load` semantics, BadMetadataError otherwise.
   */
 class ConfigSpec extends AnyFunSuite {
 
@@ -40,68 +40,94 @@ class ConfigSpec extends AnyFunSuite {
     intercept[BadMetadataError](Config.parseMetadata("] this is { nothing"))
   }
 
-  test("MiniYaml: flow and block sequences parse as Seq values") {
-    val m = MiniYaml.parse(
-      """plain: value
-        |flow: [a, b, 'c, d', [x, y]]
-        |empty_flow: []
-        |block:
-        |  - one
-        |  - "two three"
-        |  - [i, j]
-        |maps:
-        |  - name: alpha
-        |    sql: select 1
-        |  - name: beta
-        |nested:
-        |  inner:
-        |    - deep
+  test("rules config: anchors, aliases and merge keys (yaml.safe_load surface)") {
+    val rules = Config.parseMetadata(
+      """base.db:
+        |    base: &defaults
+        |        sql: &q select 1 as key
+        |        display: default display
+        |    svc:
+        |        <<: *defaults
+        |        display: own display
+        |    copy: *defaults
+        |    again:
+        |        sql: *q
         |""".stripMargin)
-    assert(m("plain") == "value")
-    assert(m("flow") == Seq("a", "b", "c, d", Seq("x", "y")))
-    assert(m("empty_flow") == Seq.empty)
-    assert(m("block") == Seq("one", "two three", Seq("i", "j")))
-    assert(m("maps") == Seq(
-      Map("name" -> "alpha", "sql" -> "select 1"),
-      Map("name" -> "beta")))
-    assert(m("nested").asInstanceOf[Map[String, Any]]("inner") == Seq("deep"))
-  }
-
-  test("MiniYaml: anchors, aliases, and merge keys (yaml.safe_load surface)") {
-    val m = MiniYaml.parse(
-      """base: &defaults
-        |    timeout: 30
-        |    retries: 2
-        |svc:
-        |    <<: *defaults
-        |    retries: 5
-        |copy: *defaults
-        |greeting: &g hello
-        |again: *g
-        |list:
-        |    - &first one
-        |    - *first
-        |    - two
-        |flow: [*g, plain]
-        |""".stripMargin)
-    val base = m("base").asInstanceOf[Map[String, Any]]
-    assert(base == Map("timeout" -> "30", "retries" -> "2"))
-    // merge supplies defaults; explicit keys win
-    assert(m("svc").asInstanceOf[Map[String, Any]] ==
-      Map("timeout" -> "30", "retries" -> "5"))
-    assert(m("copy") == base)
-    assert(m("greeting") == "hello" && m("again") == "hello")
-    assert(m("list") == Seq("one", "one", "two"))
-    assert(m("flow") == Seq("hello", "plain"))
+    assert(rules == Seq(
+      IndexRule("base.db", "base", "select 1 as key", None, Some("default display")),
+      // merge supplies defaults; the explicit key wins
+      IndexRule("base.db", "svc", "select 1 as key", None, Some("own display")),
+      IndexRule("base.db", "copy", "select 1 as key", None, Some("default display")),
+      IndexRule("base.db", "again", "select 1 as key")))
     // quoted scalars that merely LOOK like anchors/aliases stay literal
-    val lit = MiniYaml.parse("a: '&x'\nb: \"*y\"\n")
-    assert(lit == Map("a" -> "&x", "b" -> "*y"))
+    assert(Config.parseMetadata("d:\n  t:\n    sql: '&x'\n    display: \"*y\"\n") ==
+      Seq(IndexRule("d", "t", "&x", None, Some("*y"))))
   }
 
-  test("MiniYaml: unknown alias and non-mapping merge fail loudly") {
-    intercept[BadMetadataError](MiniYaml.parse("a: *nope\n"))
-    intercept[BadMetadataError](
-      MiniYaml.parse("x: &s scalar\ny:\n    <<: *s\n"))
+  test("rules config: unknown alias and non-mapping merge fail loudly") {
+    intercept[BadMetadataError](Config.parseMetadata("d:\n  t:\n    sql: *nope\n"))
+    intercept[BadMetadataError](Config.parseMetadata(
+      "x: &s scalar\nd:\n  t:\n    <<: *s\n    sql: select 1\n"))
+  }
+
+  test("rules config: a flow or block sequence where a rule is expected raises BadMetadataError") {
+    intercept[BadMetadataError](Config.parseMetadata("d:\n  t: [a, b, 'c, d']\n"))
+    intercept[BadMetadataError](Config.parseMetadata(
+      """d:
+        |  t:
+        |    - name: alpha
+        |      sql: select 1
+        |    - name: beta
+        |""".stripMargin))
+  }
+
+  test("6 dbs and 6 types come back in document order") {
+    val dbs = Seq(1, 2, 3, 4, 5, 6).map(i => s"db$i")
+    val types = Seq(1, 2, 3, 4, 5, 6).map(i => s"t$i")
+    val yaml = dbs.map { db =>
+      s"$db:\n" + types.map(t => s"  $t:\n    sql: select '$db/$t'\n").mkString
+    }.mkString
+    val expected = for (db <- dbs; t <- types) yield (db, t)
+    assert(Config.parseMetadata(yaml).map(r => (r.db, r.docType)) == expected)
+  }
+
+  test("a trailing # comment is not part of sql") {
+    assert(Config.parseMetadata("d:\n  t:\n    sql: select 1 # trailing\n").head.sql ==
+      "select 1")
+  }
+
+  test("double-quoted escapes are decoded") {
+    val yaml = "d:\n  t:\n    sql: \"select '\\\\n' \\\"x\\\"\"\n"
+    assert(Config.parseMetadata(yaml).head.sql == "select '\\n' \"x\"")
+  }
+
+  test("folded and multi-line plain sql values parse") {
+    val rules = Config.parseMetadata(
+      """d:
+        |  folded:
+        |    sql: >
+        |      select 1
+        |      as key
+        |  plain:
+        |    sql: select 1
+        |      as key
+        |""".stripMargin)
+    assert(rules.map(_.sql) == Seq("select 1 as key\n", "select 1 as key"))
+  }
+
+  test("sql: ~ and sql: null raise BadMetadataError") {
+    for (v <- Seq("~", "null"))
+      intercept[BadMetadataError](Config.parseMetadata(s"d:\n  t:\n    sql: $v\n"))
+  }
+
+  test("an unquoted brace-led display template raises BadMetadataError") {
+    val e = intercept[BadMetadataError](Config.parseMetadata(
+      "d:\n  t:\n    sql: select 1\n    display: {{ display.x }}\n"))
+    assert(e.getMessage.contains("quote"))
+    // quoted, it is the template
+    assert(Config.parseMetadata(
+      "d:\n  t:\n    sql: select 1\n    display: '{{ display.x }}'\n").head.display ==
+      Some("{{ display.x }}"))
   }
 
   test("list value where a rule mapping is required still raises BadMetadataError") {

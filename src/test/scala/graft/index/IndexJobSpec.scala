@@ -110,6 +110,46 @@ class IndexJobSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/idx/search_index").count() == 2)
   }
 
+  test("an index directory given as a file: URI opens with its positions") {
+    import java.nio.file.{Files, Paths}
+    RefFixtures.registerDogs(spark)
+    val dir = Files.createTempDirectory("graft-uri").toString
+    spark.table("dogs").write.parquet(s"$dir/dogs.parquet")
+    Files.writeString(Paths.get(s"$dir/dogs.yml"), RefFixtures.dogsYaml)
+    graft.IndexCli.run(spark, s"$dir/idx", s"$dir/dogs.yml",
+      Map("dogs" -> s"$dir/dogs.parquet"), Tokenize.Porter, None)
+    assert(graft.Cli.textArtifacts(spark, s"file:$dir/idx").positions.isDefined)
+  }
+
+  test("a -d re-index keeps other dbs' types and leaves the session's overwrite mode alone") {
+    import java.nio.file.{Files, Paths}
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    RefFixtures.registerPlugin(spark)
+    val dir = Files.createTempDirectory("graft-replace").toString
+    for (v <- Seq("commits", "emails")) spark.table(v).write.parquet(s"$dir/$v.parquet")
+    spark.read.parquet(s"$dir/emails.parquet")
+      .withColumn("subject", concat(col("subject"), lit(" (edited)")))
+      .write.parquet(s"$dir/emails_edited.parquet")
+    Files.writeString(Paths.get(s"$dir/plugin.yml"), RefFixtures.pluginYaml)
+    def run(emails: String, dbs: Option[Set[String]]): Unit =
+      graft.IndexCli.run(spark, s"$dir/idx", s"$dir/plugin.yml",
+        Map("commits" -> s"$dir/commits.parquet", "emails" -> emails), Tokenize.Porter, dbs)
+    // a session in static mode: the upsert's own write must still
+    // replace only the partitions it writes
+    spark.conf.set(key, "static")
+    try {
+      run(s"$dir/emails.parquet", None)
+      run(s"$dir/emails_edited.parquet", Some(Set("emails.db")))
+      assert(spark.conf.get(key) == "static")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val index = spark.read.parquet(s"$dir/idx/search_index")
+    assert(index.filter(col("type") === "github.db/commits").count() == 2)
+    assert(index.filter(col("type") === "emails.db/emails")
+      .select("title").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("Hey there #dogfest (edited)", "What's going on (edited)"))
+  }
+
   test("schema probe is analysis-only and lists produced columns (utils.py:68-70)") {
     RefFixtures.registerDogs(spark)
     val cols = IndexJob.deriveColumns(spark,
