@@ -40,6 +40,40 @@ class ConfigSpec extends AnyFunSuite {
     intercept[BadMetadataError](Config.parseMetadata("] this is { nothing"))
   }
 
+  // The name dates from a hand-written YAML reader; the document step is
+  // now Config.parseDocument.
+  test("MiniYaml: flow and block sequences parse as Seq values") {
+    val m = Config.parseDocument(
+      """plain: value
+        |flow: [a, b, 'c, d', [x, y]]
+        |empty_flow: []
+        |block:
+        |  - one
+        |  - "two three"
+        |  - [i, j]
+        |maps:
+        |  - name: alpha
+        |    sql: select 1
+        |  - name: beta
+        |nested:
+        |  inner:
+        |    - deep
+        |""".stripMargin).asInstanceOf[Map[String, Any]]
+    assert(m("plain") == "value")
+    assert(m("flow") == Seq("a", "b", "c, d", Seq("x", "y")))
+    assert(m("empty_flow") == Seq.empty)
+    assert(m("block") == Seq("one", "two three", Seq("i", "j")))
+    assert(m("maps") == Seq(
+      Map("name" -> "alpha", "sql" -> "select 1"),
+      Map("name" -> "beta")))
+    assert(m("nested").asInstanceOf[Map[String, Any]]("inner") == Seq("deep"))
+  }
+
+  test("a document that contains itself through an alias raises BadMetadataError") {
+    val e = intercept[BadMetadataError](Config.parseDocument("a: &a [x, *a]\n"))
+    assert(e.getMessage.contains("deeper"))
+  }
+
   test("rules config: anchors, aliases and merge keys (yaml.safe_load surface)") {
     val rules = Config.parseMetadata(
       """base.db:
