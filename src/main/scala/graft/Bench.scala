@@ -90,7 +90,12 @@ object Bench {
       Corpus.sqIndex(spark, sfDir).codes.count()
     }
     setup("dedup_build") = time {
-      ExtQueries.warmDedupArtifacts(spark, sfDir)
+      // the shared dedup artifacts, so the dedup queries time probes,
+      // not builds (the TextIndex/IvfIndex model)
+      Corpus.registerSources(spark, sfDir)
+      Seq(ExtShared.docShingles, ExtShared.docShingleArrs, ExtShared.minhashSigs,
+        ExtShared.dupSpans, ExtShared.simhashPairs, ExtShared.dupComponentsArtifact)
+        .foreach(_(spark, sfDir).count())
     }
     setup("augment_build") = time {
       // oracle-augmentation fixture columns (VERDICT r7 item 6): built
@@ -102,7 +107,8 @@ object Bench {
       // shipped-artifact serving model: encode/fertility queries time
       // ENCODING against the prebuilt model; the training queries
       // (x_pipe_bpe_merges, x_pipe_unigram_lm) still time training
-      ExtShared.warmTokenizerArtifacts(spark, sfDir)
+      Seq(ExtShared.bpeMergesArtifact, ExtShared.unigramModelArtifact,
+        ExtShared.wordpieceVocabArtifact).foreach(_(spark, sfDir).count())
     }
     setup("pca_build") = time {
       // the top-PC artifact (same shipped-model contract): x_sim_abtt

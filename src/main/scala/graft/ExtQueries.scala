@@ -1,10 +1,5 @@
 package graft
 
-import graft.core.Schema
-import graft.ext.{Dedup, Events, Pipeline, Quality, Similarity, TextAnalysis}
-import graft.index.IndexJob
-import org.apache.spark.sql.functions._
-
 /** The 100 TB training-data-pipeline extension surface (SURVEY §7.5,
   * BASELINE.json north_star): dedup (exact / n-gram Jaccard / MinHash
   * LSH / SimHash / embedding), similarity search (brute-force, IVF,
@@ -20,17 +15,10 @@ import org.apache.spark.sql.functions._
 object ExtQueries {
 
   /** All extension queries — family files concatenated (split in r7;
-    * shared artifact caches live in [[ExtShared]]).
+    * shared artifacts live in [[ExtShared]]).
     */
   val defs: Seq[QueryDef] =
     ExtDedupQueries.defs ++ ExtSimQueries.defs ++ ExtTextQueries.defs ++
       ExtQualityQueries.defs ++ ExtPipeQueries.defs ++
       ExtMmQueries.defs ++ ExtEventQueries.defs ++ ExtStreamQueries.defs
-
-  /** Bench setup hook: materialize the shared dedup artifacts so query
-    * timings measure probes, not builds (the TextIndex/IvfIndex model).
-    */
-  def warmDedupArtifacts(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Unit =
-    ExtShared.warmDedupArtifacts(spark, sfDir)
 }

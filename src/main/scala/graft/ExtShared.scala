@@ -1,19 +1,17 @@
 package graft
 
-import graft.core.Schema
-import graft.ext.{Dedup, Events, Pipeline, Quality, Similarity, TextAnalysis}
-import graft.index.IndexJob
+import graft.ext.{Dedup, Pipeline, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
 /** Shared infrastructure for the extension-query families (split from
-  * the 2,846-line ExtQueries in r7 — VERDICT r6 item 5): the per-JVM
-  * artifact caches (shingles / minhash signatures / near-dup pairs /
-  * simhash pairs / duplicate spans — one materialization per scale
-  * dir, persisted, consumed by several queries), the memoized
-  * streaming source dirs, and the DuckDB oracle CTE builders every
-  * family interpolates.
+  * the 2,846-line ExtQueries in r7 — VERDICT r6 item 5): the build-once
+  * [[Artifact]]s (shingles / minhash signatures / near-dup pairs /
+  * simhash pairs / duplicate spans — one persisted materialization per
+  * scale dir, consumed by several queries), the streaming source dirs,
+  * and the DuckDB oracle CTE builders every family interpolates.
   */
 private[graft] object ExtShared {
-
 
   private[graft] def ducktokens(x: String) = OracleGen.tokensSql(x)
   private[graft] val duckHash = // mirrors Dedup.portableHash
@@ -25,31 +23,23 @@ private[graft] object ExtShared {
   private[graft] val K = 16
   private[graft] val BANDS = 4
 
-  // verified near-dup pairs memoized per sfDir: the dedup stage's output
-  // is the clustering stage's input — one materialization feeds both
+  // verified near-dup pairs per sfDir: the dedup stage's output is the
+  // clustering stage's input — one materialization feeds both
   // x_dedup_minhash and x_dedup_components (the artifact pattern).
-  // LIFECYCLE: per-JVM, one persisted frame per scale dir — same
-  // serving-lifetime contract as the Corpus caches (see Corpus.scala)
-  private[graft] val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def minhashPairs(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    pairsCache.getOrElseUpdate(sfDir,
-      Dedup.minhashNearDupsFromDocArrs(docShingleArrs(spark, sfDir),
-        minhashSigs(spark, sfDir), k = K, bands = BANDS, threshold = 0.4).persist())
+  private[graft] val minhashPairs = Artifact[String, DataFrame] { (spark, sfDir) =>
+    Dedup.minhashNearDupsFromDocArrs(docShingleArrs(spark, sfDir),
+      minhashSigs(spark, sfDir), k = K, bands = BANDS, threshold = 0.4).persist()
+  }
 
   // the dedup artifact pair (VERDICT r3: deliberate sharing, not the
   // accidental cache-manager reuse the r3 persists leaked into): ONE
   // 3-shingle explode and ONE minhash-signature build per scale dir,
   // persisted, feeding x_dedup_ngram, x_dedup_minhash{,_salted} and
-  // x_dedup_components. Same per-JVM lifecycle as pairsCache.
-  private[graft] val shCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def docShingles(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    shCache.getOrElseUpdate(sfDir,
-      // narrow form: (doc_id, shingle BIGINT) from the compiled kernel
-      Dedup.shingleHashes(spark.table("documents"), "text", "doc_id", 3).persist())
+  // x_dedup_components.
+  private[graft] val docShingles = Artifact[String, DataFrame] { (spark, _) =>
+    // narrow form: (doc_id, shingle BIGINT) from the compiled kernel
+    Dedup.shingleHashes(spark.table("documents"), "text", "doc_id", 3).persist()
+  }
   // The PER-DOC array form of the shingle artifact: (doc_id, __arr
   // sorted array<bigint>, n_sh) — one rollup of the exploded relation,
   // persisted beside it (r15, VERDICT item 4). Feeds the minhash
@@ -61,136 +51,103 @@ private[graft] object ExtShared {
   // mirrors); at 100 TB both are views of ONE on-disk dedup index,
   // and the verify/signature paths reading the doc-level layout move
   // one row per doc instead of one per shingle.
-  private[graft] val shArrCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def docShingleArrs(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    shArrCache.getOrElseUpdate(sfDir,
-      docShingles(spark, sfDir).groupBy("doc_id")
-        .agg(sort_array(collect_list(col("shingle"))).as("__arr"),
-          count(lit(1)).as("n_sh")).persist())
-  private[graft] val sigsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def minhashSigs(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    sigsCache.getOrElseUpdate(sfDir, {
-      // in-row kernel over the per-doc arrays: a signature depends only
-      // on its own doc's shingles, so the former groupBy over the
-      // exploded relation (one exchange + k min-aggregates per shingle
-      // row) is a pure projection here — bit-identical mins
-      // (MinhashSigsSpec pins kernel == relational aggregate)
-      graft.functions.MinhashFunctions.register(spark)
-      val mh = graft.functions.MinhashFunctions
-        .minhash_sigs_e(org.apache.spark.sql.functions.col("__arr"), K)
-      docShingleArrs(spark, sfDir)
-        .select(col("doc_id"), mh.as("__mh"))
-        // an empty shingle array yields a null signature: drop the row,
-        // as the relational aggregate did
-        .filter(col("__mh").isNotNull)
-        .select(col("doc_id") +:
-          (0 until K).map(i => col("__mh")(i).as(s"mh_$i")): _*)
-        .persist()
-    })
+  private[graft] val docShingleArrs = Artifact[String, DataFrame] { (spark, sfDir) =>
+    docShingles(spark, sfDir).groupBy("doc_id")
+      .agg(sort_array(collect_list(col("shingle"))).as("__arr"),
+        count(lit(1)).as("n_sh")).persist()
+  }
+  private[graft] val minhashSigs = Artifact[String, DataFrame] { (spark, sfDir) =>
+    // in-row kernel over the per-doc arrays: a signature depends only
+    // on its own doc's shingles, so the former groupBy over the
+    // exploded relation (one exchange + k min-aggregates per shingle
+    // row) is a pure projection here — bit-identical mins
+    // (MinhashSigsSpec pins kernel == relational aggregate)
+    graft.functions.MinhashFunctions.register(spark)
+    val mh = graft.functions.MinhashFunctions.minhash_sigs_e(col("__arr"), K)
+    docShingleArrs(spark, sfDir)
+      .select(col("doc_id"), mh.as("__mh"))
+      // an empty shingle array yields a null signature: drop the row,
+      // as the relational aggregate did
+      .filter(col("__mh").isNotNull)
+      .select(col("doc_id") +:
+        (0 until K).map(i => col("__mh")(i).as(s"mh_$i")): _*)
+      .persist()
+  }
 
   // Near-dup component artifact — the pointer-doubled (doc_id,
-  // component) relation over the verified pair artifact, memoized per
-  // scale dir: the composed curation pipeline consumes the CLUSTERS,
-  // not the pairs, and a 100 TB run computes components once and
-  // reuses them across every downstream release step. persist() (not
-  // localCheckpoint) so the consuming plan shows the
-  // InMemoryTableScan the PlanSpec pin asserts. x_dedup_components
-  // deliberately does NOT read this cache — it TIMES the component
-  // computation itself.
-  private[graft] val compCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def dupComponentsArtifact(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    compCache.getOrElseUpdate(sfDir,
-      Dedup.duplicateComponents(minhashPairs(spark, sfDir)
-        .select("id_a", "id_b")).persist())
+  // component) relation over the verified pair artifact: the composed
+  // curation pipeline consumes the CLUSTERS, not the pairs, and a
+  // 100 TB run computes components once and reuses them across every
+  // downstream release step. persist() (not localCheckpoint) so the
+  // consuming plan shows the InMemoryTableScan the PlanSpec pin
+  // asserts. x_dedup_components deliberately does NOT read this
+  // artifact — it TIMES the component computation itself.
+  private[graft] val dupComponentsArtifact = Artifact[String, DataFrame] { (spark, sfDir) =>
+    Dedup.duplicateComponents(minhashPairs(spark, sfDir).select("id_a", "id_b")).persist()
+  }
 
   // Cell-blocked kNN-graph artifact (k=3 over the persisted IVF
   // assignment) — the edge relation graph-based curation consumes
-  // (r14 OPTIMIZATION, the pairsCache/compCache contract): the N^1.5
-  // within-cell join runs once per scale dir; x_sim_knn_graph
-  // deliberately does NOT read this cache — it TIMES the graph build
-  // itself (the x_dedup_components convention), while x_sim_clusters
-  // times thresholding + components + rollup over the artifact.
-  // keyed on (session, sfDir) — ADVICE r14 #1: an sfDir-only key would
-  // permanently bind the frame built against the FIRST SparkSession, so
-  // a later session in the same JVM would receive a stale (possibly
-  // stopped-session) frame
-  private[graft] val knnCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-  private[graft] def knnGraphArtifact(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    knnCache.getOrElseUpdate((spark, sfDir),
-      graft.ext.Similarity.knnGraph(
-        Corpus.ivfIndex(spark, sfDir).assigned, k = 3).persist())
+  // (r14 OPTIMIZATION): the N^1.5 within-cell join runs once per scale
+  // dir; x_sim_knn_graph deliberately does NOT read this artifact — it
+  // TIMES the graph build itself (the x_dedup_components convention),
+  // while x_sim_clusters times thresholding + components + rollup over
+  // the artifact.
+  private[graft] val knnGraphArtifact = Artifact[String, DataFrame] { (spark, sfDir) =>
+    Similarity.knnGraph(Corpus.ivfIndex(spark, sfDir).assigned, k = 3).persist()
+  }
 
   // SimHash near-dup pair artifact (60-bit, 4 bands, hamming ≤ 8):
   // consumed by both the pair listing and the method-overlap matrix —
   // one signature build + banded candidate pass per scale dir.
-  private[graft] val simhashPairsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def simhashPairs(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    simhashPairsCache.getOrElseUpdate(sfDir,
-      Dedup.simhashNearDups(spark.table("documents"), "text", "doc_id",
-        bits = 60, bands = 4, maxHamming = 8).persist())
+  private[graft] val simhashPairs = Artifact[String, DataFrame] { (spark, _) =>
+    Dedup.simhashNearDups(spark.table("documents"), "text", "doc_id",
+      bits = 60, bands = 4, maxHamming = 8).persist()
+  }
 
   // Duplicated-span artifact (k=8, minDf=2 over documents): span
   // detection is the corpus-sized term; the span LIST and the per-doc
   // cut budgets both derive from it, so compute once per scale dir and
-  // persist — same lifecycle as pairsCache.
-  private[graft] val spansCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def dupSpans(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    spansCache.getOrElseUpdate(sfDir,
-      Dedup.duplicateSpans(spark.table("documents"), "text", "doc_id",
-        k = 8, minDf = 2).persist())
+  // persist.
+  private[graft] val dupSpans = Artifact[String, DataFrame] { (spark, _) =>
+    Dedup.duplicateSpans(spark.table("documents"), "text", "doc_id",
+      k = 8, minDf = 2).persist()
+  }
 
   // The streaming parquet source wants a DIRECTORY; testdata ships one
-  // file per table — expose it through a symlink dir. Memoized per
-  // (sfDir, file) with deleteOnExit (ADVICE r6): previously every
-  // x_stream_* execution created a fresh never-deleted temp dir (two
-  // per query under the min-of-2 bench).
-  private[graft] val streamSrcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private[graft] def streamSourceDir(sfDir: String, file: String): String =
-    streamSrcCache.getOrElseUpdate((sfDir, file), {
-      val dir = java.nio.file.Files.createTempDirectory("graft-stream-src")
-      dir.toFile.deleteOnExit() // registered first → deleted last
-      // absolutize: a RELATIVE sfDir would otherwise produce a symlink
-      // whose target resolves against the temp dir — dangling, which
-      // streams silently as an empty source
-      val target = java.nio.file.Paths.get(s"$sfDir/$file")
-        .toAbsolutePath.normalize()
-      val link = dir.resolve(file)
-      try java.nio.file.Files.createSymbolicLink(link, target)
-      catch { case _: Exception => java.nio.file.Files.copy(target, link): Unit }
-      link.toFile.deleteOnExit()
-      dir.toString
-    })
+  // file per table — expose it through a symlink dir, made once and
+  // deleted on exit, so repeated x_stream_* runs leave no temp dirs.
+  private val streamSrc = Artifact[(String, String), String] { case (_, (sfDir, file)) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src")
+    dir.toFile.deleteOnExit() // registered first → deleted last
+    // absolutize: a RELATIVE sfDir would otherwise produce a symlink
+    // whose target resolves against the temp dir — dangling, which
+    // streams silently as an empty source
+    val target = java.nio.file.Paths.get(s"$sfDir/$file")
+      .toAbsolutePath.normalize()
+    val link = dir.resolve(file)
+    try java.nio.file.Files.createSymbolicLink(link, target)
+    catch { case _: Exception => java.nio.file.Files.copy(target, link): Unit }
+    link.toFile.deleteOnExit()
+    dir.toString
+  }
+  private[graft] def streamSourceDir(spark: SparkSession, sfDir: String,
+      file: String): String = streamSrc(spark, (sfDir, file))
 
-  // Multi-file copy of a single-file testdata table, so AvailableNow
-  // streaming runs with maxFilesPerTrigger=1 see REAL multi-batch
-  // execution (a one-file source is a single batch — batch-equality
-  // would be vacuous). Memoized per (sfDir, file, parts), deleteOnExit.
-  private[graft] val multiFileSrcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), String]
-  private[graft] def multiFileSourceDir(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, file: String, parts: Int): String =
-    multiFileSrcCache.getOrElseUpdate((sfDir, file, parts), {
-      val dir = java.nio.file.Files.createTempDirectory("graft-stream-multisrc")
-      dir.toFile.deleteOnExit()
-      spark.read.parquet(s"$sfDir/$file")
-        .repartition(parts)
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
-    })
+  // Multi-file copy (4 parts) of a single-file testdata table, so
+  // AvailableNow streaming runs with maxFilesPerTrigger=1 see REAL
+  // multi-batch execution (a one-file source is a single batch —
+  // batch-equality would be vacuous). deleteOnExit.
+  private val multiFileSrc = Artifact[(String, String), String] { case (spark, (sfDir, file)) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-multisrc")
+    dir.toFile.deleteOnExit()
+    spark.read.parquet(s"$sfDir/$file")
+      .repartition(4)
+      .write.mode("overwrite").parquet(dir.toString)
+    dir.toString
+  }
+  private[graft] def multiFileSourceDir(spark: SparkSession, sfDir: String,
+      file: String): String = multiFileSrc(spark, (sfDir, file))
 
   /** Streaming reader over an events parquet dir, normalized across the
     * two testdata ts layouts (raw INT64 nanos vs timestamp[us] — see
@@ -261,32 +218,24 @@ private[graft] object ExtShared {
   // triangle counting / k-core, where the bipartite host graph is
   // degenerate (zero triangles by construction). Built ONCE per
   // scale dir and persisted — both x_graph_triangles and
-  // x_graph_kcore consume it (the pairsCache artifact pattern). The
-  // per-order self-join is bounded by ≤7 items per order, not the
-  // corpus.
-  private[graft] val copurchaseCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def copurchaseEdges(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    copurchaseCache.getOrElseUpdate(sfDir, {
-      Corpus.registerSources(spark, sfDir)
-      graft.ext.Graph.cooccurrenceEdges(
-        spark.table("lineitem").select("l_orderkey", "l_partkey"),
-        "l_orderkey", "l_partkey").persist()
-    })
+  // x_graph_kcore consume it. The per-order self-join is bounded by
+  // ≤7 items per order, not the corpus.
+  private[graft] val copurchaseEdges = Artifact[String, DataFrame] { (spark, sfDir) =>
+    Corpus.registerSources(spark, sfDir)
+    graft.ext.Graph.cooccurrenceEdges(
+      spark.table("lineitem").select("l_orderkey", "l_partkey"),
+      "l_orderkey", "l_partkey").persist()
+  }
 
   // The triangle closure over the co-purchase graph — the shared
   // build artifact behind x_graph_triangles AND x_graph_edgesim (one
   // degree-oriented enumeration per scale dir, eagerly checkpointed
-  // inside triangleClosure; the dedup-pair-artifact lifecycle).
-  private[graft] val triClosureCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ext.Graph.TriangleClosure]
-  private[graft] def copurchaseTriangleClosure(
-      spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): graft.ext.Graph.TriangleClosure =
-    triClosureCache.getOrElseUpdate(sfDir,
+  // inside triangleClosure).
+  private[graft] val copurchaseTriangleClosure =
+    Artifact[String, graft.ext.Graph.TriangleClosure] { (spark, sfDir) =>
       graft.ext.Graph.triangleClosure(copurchaseEdges(spark, sfDir),
-        edgesDistinct = true))
+        edgesDistinct = true)
+    }
 
   // shared oracle CTE for the same graph
   private[graft] val copurchaseCte: String =
@@ -296,120 +245,99 @@ private[graft] object ExtShared {
       |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk <> b.pk
       |)""".stripMargin
 
-  // Z-ordered events layout, written ONCE per scale dir (the index-
-  // artifact lifecycle: the layout is a build-side product; queries
-  // measure reads). Temp dir with deleteOnExit, like streamSourceDir.
-  private[graft] val zorderCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private[graft] def zorderDir(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String =
-    zorderCache.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft-zorder")
-      dir.toFile.deleteOnExit()
-      val out = dir.resolve("events_z").toString
-      Corpus.registerSources(spark, sfDir)
-      graft.ext.Layout.writeZOrdered(
-        spark.table("events")
-          .withColumn("ts_us", unix_micros(col("ts")))
-          .select("event_id", "user_id", "ts_us", "value", "event_type"),
-        "user_id", "ts_us", out)
-      out
-    })
+  // Z-ordered events layout, written ONCE per scale dir (the layout is
+  // a build-side product; queries measure reads). Temp dir with
+  // deleteOnExit, like streamSourceDir.
+  private[graft] val zorderDir = Artifact[String, String] { (spark, sfDir) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft-zorder")
+    dir.toFile.deleteOnExit()
+    val out = dir.resolve("events_z").toString
+    Corpus.registerSources(spark, sfDir)
+    graft.ext.Layout.writeZOrdered(
+      spark.table("events")
+        .withColumn("ts_us", unix_micros(col("ts")))
+        .select("event_id", "user_id", "ts_us", "value", "event_type"),
+      "user_id", "ts_us", out)
+    out
+  }
 
-  // Bucketed orders/lineitem tables, written ONCE per scale dir (the
-  // zorderDir lifecycle): bucketing is the PRE-PAID shuffle — the
-  // bucketed-join query then runs with zero runtime Exchange. Tables
-  // live in the session catalog (bucket metadata is a table property);
-  // names carry a per-dir tag so two scale dirs never collide in one
-  // JVM.
-  private[graft] val bucketedCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private[graft] def bucketedTables(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): (String, String) =
-    bucketedCache.getOrElseUpdate(sfDir, {
-      Corpus.registerSources(spark, sfDir)
-      // md5 of the FULL path, not String.hashCode: a 32-bit collision
-      // between two scale dirs in one JVM would silently overwrite the
-      // other dir's bucketed tables (writeBucketed force-deletes).
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(sfDir.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(12)
-      val o = s"graft_buck_orders_$tag"
-      val l = s"graft_buck_lineitem_$tag"
-      graft.ext.Layout.writeBucketed(
-        spark.table("orders").select("o_orderkey", "o_orderdate", "o_totalprice"),
-        "o_orderkey", o)
-      graft.ext.Layout.writeBucketed(
-        spark.table("lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
-        "l_orderkey", l)
-      (o, l)
-    })
+  // Bucketed orders/lineitem tables, written ONCE per scale dir:
+  // bucketing is the PRE-PAID shuffle — the bucketed-join query then
+  // runs with zero runtime Exchange. Tables live in the session catalog
+  // (bucket metadata is a table property); names carry a per-dir tag so
+  // two scale dirs never collide in one JVM.
+  private[graft] val bucketedTables = Artifact[String, (String, String)] { (spark, sfDir) =>
+    Corpus.registerSources(spark, sfDir)
+    // md5 of the FULL path, not String.hashCode: a 32-bit collision
+    // between two scale dirs in one JVM would silently overwrite the
+    // other dir's bucketed tables (writeBucketed force-deletes).
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(sfDir.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString.take(12)
+    val o = s"graft_buck_orders_$tag"
+    val l = s"graft_buck_lineitem_$tag"
+    graft.ext.Layout.writeBucketed(
+      spark.table("orders").select("o_orderkey", "o_orderdate", "o_totalprice"),
+      "o_orderkey", o)
+    graft.ext.Layout.writeBucketed(
+      spark.table("lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
+      "l_orderkey", l)
+    (o, l)
+  }
 
   // Hive-style partitioned events layout (dir per event_type), written
   // ONCE per scale dir: the third pruning axis beside z-order min/max
   // stats and bucketing — a partition-column predicate eliminates
   // whole DIRECTORIES at planning time, before any file is opened.
-  private[graft] val hivePartCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private[graft] def eventsByTypeDir(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String =
-    hivePartCache.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft-hivepart")
-      dir.toFile.deleteOnExit()
-      val out = dir.resolve("events_by_type").toString
-      Corpus.registerSources(spark, sfDir)
-      spark.table("events")
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .select("event_id", "user_id", "ts_us", "value", "event_type")
-        .write.partitionBy("event_type").parquet(out)
-      out
-    })
+  private[graft] val eventsByTypeDir = Artifact[String, String] { (spark, sfDir) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft-hivepart")
+    dir.toFile.deleteOnExit()
+    val out = dir.resolve("events_by_type").toString
+    Corpus.registerSources(spark, sfDir)
+    spark.table("events")
+      .withColumn("ts_us", unix_micros(col("ts")))
+      .select("event_id", "user_id", "ts_us", "value", "event_type")
+      .write.partitionBy("event_type").parquet(out)
+    out
+  }
 
   // Small-file → compacted events layout, built ONCE per scale dir:
   // the fixture first manufactures the small-file problem (64 tiny
   // files) and then compacts to 8 range-partitioned, event_id-sorted
   // files; the declared query reads the COMPACTED copy and must be
   // content-identical to the source table.
-  private[graft] val compactCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private[graft] def compactedEventsDir(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String =
-    compactCache.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft-compact")
-      dir.toFile.deleteOnExit()
-      val small = dir.resolve("small").toString
-      val out = dir.resolve("compacted").toString
-      Corpus.registerSources(spark, sfDir)
-      spark.table("events")
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .select("event_id", "user_id", "ts_us", "value", "event_type")
-        .repartition(64)
-        .write.parquet(small)
-      graft.ext.Layout.compact(spark.read.parquet(small), "event_id", out, 8)
-      out
-    })
+  private[graft] val compactedEventsDir = Artifact[String, String] { (spark, sfDir) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft-compact")
+    dir.toFile.deleteOnExit()
+    val small = dir.resolve("small").toString
+    val out = dir.resolve("compacted").toString
+    Corpus.registerSources(spark, sfDir)
+    spark.table("events")
+      .withColumn("ts_us", unix_micros(col("ts")))
+      .select("event_id", "user_id", "ts_us", "value", "event_type")
+      .repartition(64)
+      .write.parquet(small)
+    graft.ext.Layout.compact(spark.read.parquet(small), "event_id", out, 8)
+    out
+  }
 
   // Schema-evolution fixture: two parquet generations under one root
   // (gen=1 lacks the lang column), written ONCE per scale dir — the
   // decade-of-data reality a 100 TB corpus always has. Readers union
   // the generations with mergeSchema; missing columns surface as
   // NULLs, never as failures.
-  private[graft] val schemaEvoCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private[graft] def schemaEvoDir(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String =
-    schemaEvoCache.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft-schemaevo")
-      dir.toFile.deleteOnExit()
-      val root = dir.resolve("docs_gen").toString
-      Corpus.registerSources(spark, sfDir)
-      val d = spark.table("documents")
-      d.filter(col("doc_id") % 2 === 0).select("doc_id", "source")
-        .write.parquet(s"$root/gen=1")
-      d.filter(col("doc_id") % 2 === 1).select("doc_id", "source", "lang")
-        .write.parquet(s"$root/gen=2")
-      root
-    })
+  private[graft] val schemaEvoDir = Artifact[String, String] { (spark, sfDir) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft-schemaevo")
+    dir.toFile.deleteOnExit()
+    val root = dir.resolve("docs_gen").toString
+    Corpus.registerSources(spark, sfDir)
+    val d = spark.table("documents")
+    d.filter(col("doc_id") % 2 === 0).select("doc_id", "source")
+      .write.parquet(s"$root/gen=1")
+    d.filter(col("doc_id") % 2 === 1).select("doc_id", "source", "lang")
+      .write.parquet(s"$root/gen=2")
+    root
+  }
 
   // Deterministic oracle-augmentation fixtures, materialized ONCE per
   // scale dir as extra columns beside documents (VERDICT r7 item 6):
@@ -419,124 +347,83 @@ private[graft] object ExtShared {
   // entry measure test scaffolding. The derivations live here, run at
   // setup time, and the queries consume prebuilt persisted columns;
   // the DuckDB oracles keep the identical derivations as CTEs.
-  private[graft] val augDocsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def augDocs(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    augDocsCache.getOrElseUpdate(sfDir, {
-      Corpus.registerSources(spark, sfDir)
-      val id = col("doc_id").cast("string")
-      val body = coalesce(col("text"), lit(""))
-      spark.table("documents").select(
-        col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"),
-        // x_text_pii: every 7th doc gains email + IP + phone
-        concat(body, when(col("doc_id") % 7 === 0,
-          concat(lit(" contact user"), id,
-            lit("@example.com 10.0."), (col("doc_id") % 200).cast("string"),
-            lit(".1 call 555-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-          .otherwise(lit(""))).as("text_pii"),
-        // x_text_urlhosts / x_graph_pagerank: every 3rd doc links 2 hosts
-        concat(body, when(col("doc_id") % 3 === 0,
-          concat(lit(" see https://www.site"), (col("doc_id") % 11).cast("string"),
-            lit(".example.com/page/"), id,
-            lit(" and http://cdn"), (col("doc_id") % 5).cast("string"),
-            lit(".example.net/x")))
-          .otherwise(lit(""))).as("text_urls"),
-        // x_text_normalize: every 4th doc gains decomposed accent (e +
-        // U+0301), a BEL control, and tab/space runs
-        concat(body, when(col("doc_id") % 4 === 0,
-          concat(lit("  cafe\u0301 \u0007drink"), lit("\t\t x ")))
-          .otherwise(lit(""))).as("text_dirty"),
-        // x_text_url_dedup: every 3rd doc links ONE page in 4 spellings
-        concat(body, when(col("doc_id") % 3 === 0, concat(
-          lit(" https://WWW.site"), (col("doc_id") % 7).cast("string"),
-          lit(".example.com/p/"), id, lit("/"),
-          lit(" http://site"), (col("doc_id") % 7).cast("string"),
-          lit(".example.com/p/"), id, lit("?utm_source=feed"),
-          lit(" https://site"), (col("doc_id") % 7).cast("string"),
-          lit(".example.com/p/"), id, lit("#sec"),
-          lit(" https://SITE"), (col("doc_id") % 7).cast("string"),
-          lit(".EXAMPLE.com/p/"), id)).otherwise(lit(""))).as("text_url4"),
-        // x_quality_para_dup: shared footer + repeated body for %3 docs
-        concat(body,
-          lit("\n\nshared footer "), (col("doc_id") % 5).cast("string"),
-          lit("\n\n"),
-          when(col("doc_id") % 3 === 0, body)
-            .otherwise(concat(lit("unique tail "), id))).as("text_para"),
-        // x_quality_boilerplate: unique uid line + hot footer lines
-        concat(body,
-          lit("\nuid "), id,
-          when(col("doc_id") % 2 === 0,
-            lit("\n(c) example corp all rights reserved")).otherwise(lit("")),
-          when(col("doc_id") % 3 === 0,
-            lit("\ngenerated page footer")).otherwise(lit("")))
-          .as("text_lines"),
-        // x_text_html: every 2nd doc wrapped in markup with entities;
-        // odd docs stay raw, so the stripper must be a no-op on them
-        when(col("doc_id") % 2 === 0, concat(
-          lit("<html><head><title>Doc "), id,
-          lit("</title></head><body><p>"), body,
-          lit("</p><div class=\"nav\">menu &amp; links &lt;here&gt;</div>" +
-            "<br>&nbsp;&quot;end&quot;</body></html>")))
-          .otherwise(body).as("text_html")
-      ).persist()
-    })
-
-  /** Bench setup hook: materialize the shared dedup artifacts so query
-    * timings measure probes, not builds (the TextIndex/IvfIndex model).
-    */
-  def warmDedupArtifacts(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Unit = {
+  private[graft] val augDocs = Artifact[String, DataFrame] { (spark, sfDir) =>
     Corpus.registerSources(spark, sfDir)
-    docShingles(spark, sfDir).count()
-    docShingleArrs(spark, sfDir).count()
-    minhashSigs(spark, sfDir).count()
-    dupSpans(spark, sfDir).count()
-    simhashPairs(spark, sfDir).count()
-    dupComponentsArtifact(spark, sfDir).count()
+    val id = col("doc_id").cast("string")
+    val body = coalesce(col("text"), lit(""))
+    spark.table("documents").select(
+      col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"),
+      // x_text_pii: every 7th doc gains email + IP + phone
+      concat(body, when(col("doc_id") % 7 === 0,
+        concat(lit(" contact user"), id,
+          lit("@example.com 10.0."), (col("doc_id") % 200).cast("string"),
+          lit(".1 call 555-"),
+          lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
+        .otherwise(lit(""))).as("text_pii"),
+      // x_text_urlhosts / x_graph_pagerank: every 3rd doc links 2 hosts
+      concat(body, when(col("doc_id") % 3 === 0,
+        concat(lit(" see https://www.site"), (col("doc_id") % 11).cast("string"),
+          lit(".example.com/page/"), id,
+          lit(" and http://cdn"), (col("doc_id") % 5).cast("string"),
+          lit(".example.net/x")))
+        .otherwise(lit(""))).as("text_urls"),
+      // x_text_normalize: every 4th doc gains decomposed accent (e +
+      // U+0301), a BEL control, and tab/space runs
+      concat(body, when(col("doc_id") % 4 === 0,
+        concat(lit("  cafe\u0301 \u0007drink"), lit("\t\t x ")))
+        .otherwise(lit(""))).as("text_dirty"),
+      // x_text_url_dedup: every 3rd doc links ONE page in 4 spellings
+      concat(body, when(col("doc_id") % 3 === 0, concat(
+        lit(" https://WWW.site"), (col("doc_id") % 7).cast("string"),
+        lit(".example.com/p/"), id, lit("/"),
+        lit(" http://site"), (col("doc_id") % 7).cast("string"),
+        lit(".example.com/p/"), id, lit("?utm_source=feed"),
+        lit(" https://site"), (col("doc_id") % 7).cast("string"),
+        lit(".example.com/p/"), id, lit("#sec"),
+        lit(" https://SITE"), (col("doc_id") % 7).cast("string"),
+        lit(".EXAMPLE.com/p/"), id)).otherwise(lit(""))).as("text_url4"),
+      // x_quality_para_dup: shared footer + repeated body for %3 docs
+      concat(body,
+        lit("\n\nshared footer "), (col("doc_id") % 5).cast("string"),
+        lit("\n\n"),
+        when(col("doc_id") % 3 === 0, body)
+          .otherwise(concat(lit("unique tail "), id))).as("text_para"),
+      // x_quality_boilerplate: unique uid line + hot footer lines
+      concat(body,
+        lit("\nuid "), id,
+        when(col("doc_id") % 2 === 0,
+          lit("\n(c) example corp all rights reserved")).otherwise(lit("")),
+        when(col("doc_id") % 3 === 0,
+          lit("\ngenerated page footer")).otherwise(lit("")))
+        .as("text_lines"),
+      // x_text_html: every 2nd doc wrapped in markup with entities;
+      // odd docs stay raw, so the stripper must be a no-op on them
+      when(col("doc_id") % 2 === 0, concat(
+        lit("<html><head><title>Doc "), id,
+        lit("</title></head><body><p>"), body,
+        lit("</p><div class=\"nav\">menu &amp; links &lt;here&gt;</div>" +
+          "<br>&nbsp;&quot;end&quot;</body></html>")))
+        .otherwise(body).as("text_html")
+    ).persist()
   }
 
-  // Trained tokenizer models memoized per sfDir — the serving model:
-  // a tokenizer trains ONCE and ships as an artifact; the encode /
-  // fertility queries consume it (the index/IVF/PQ setup contract, so
-  // their timings measure encoding, not re-training per query). The
-  // TRAINING queries (x_pipe_bpe_merges, x_pipe_unigram_lm) still
-  // time training itself. localCheckpoint(true) materializes.
-  private[graft] val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def bpeMergesArtifact(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    bpeCache.getOrElseUpdate(sfDir, {
-      Corpus.registerSources(spark, sfDir)
-      graft.ext.Pipeline.bpeMerges(spark.table("documents"), "text", steps = 5)
-        .localCheckpoint(true)
-    })
-  private[graft] val unigramCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def unigramModelArtifact(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    unigramCache.getOrElseUpdate(sfDir, {
-      Corpus.registerSources(spark, sfDir)
-      graft.ext.Pipeline.unigramLm(spark.table("documents"), "text")
-        .localCheckpoint(true)
-    })
-  private[graft] val wordpieceCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private[graft] def wordpieceVocabArtifact(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): org.apache.spark.sql.DataFrame =
-    wordpieceCache.getOrElseUpdate(sfDir, {
-      Corpus.registerSources(spark, sfDir)
-      graft.ext.Pipeline.wordpieceVocab(spark.table("documents"), "text")
-        .localCheckpoint(true)
-    })
-
-  /** Bench setup hook: train the three tokenizer models once. */
-  def warmTokenizerArtifacts(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Unit = {
-    bpeMergesArtifact(spark, sfDir).count()
-    unigramModelArtifact(spark, sfDir).count()
-    wordpieceVocabArtifact(spark, sfDir).count()
+  // Trained tokenizer models per sfDir — the serving model: a tokenizer
+  // trains ONCE and ships as an artifact; the encode / fertility
+  // queries consume it (the index/IVF/PQ setup contract, so their
+  // timings measure encoding, not re-training per query). The TRAINING
+  // queries (x_pipe_bpe_merges, x_pipe_unigram_lm) still time training
+  // itself. localCheckpoint(true) materializes.
+  private[graft] val bpeMergesArtifact = Artifact[String, DataFrame] { (spark, sfDir) =>
+    Corpus.registerSources(spark, sfDir)
+    Pipeline.bpeMerges(spark.table("documents"), "text", steps = 5).localCheckpoint(true)
+  }
+  private[graft] val unigramModelArtifact = Artifact[String, DataFrame] { (spark, sfDir) =>
+    Corpus.registerSources(spark, sfDir)
+    Pipeline.unigramLm(spark.table("documents"), "text").localCheckpoint(true)
+  }
+  private[graft] val wordpieceVocabArtifact = Artifact[String, DataFrame] { (spark, sfDir) =>
+    Corpus.registerSources(spark, sfDir)
+    Pipeline.wordpieceVocab(spark.table("documents"), "text").localCheckpoint(true)
   }
 
   /** The sh relation mirrors Dedup.shingleHashes: DISTINCT portable
@@ -1084,19 +971,14 @@ private[graft] object ExtShared {
        |$rounds""".stripMargin
   }
 
-  // The d-value top-PC artifact memoized per sfDir (the PQ-codebook
+  // The d-value top-PC artifact per sfDir (the PQ-codebook
   // bounded-collect contract): trained once, consumed by the ABTT
   // transform query as a literal broadcast model.
-  private[graft] val pcaCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-  private[graft] def pcaArtifact(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Seq[Long] =
-    pcaCache.getOrElseUpdate(sfDir, {
-      Corpus.registerSources(spark, sfDir)
-      graft.ext.Similarity
-        .topPrincipalComponent(spark.table("embeddings"), iters = 8)
-        .orderBy("dim").collect().map(_.getLong(1)).toSeq
-    })
+  private[graft] val pcaArtifact = Artifact[String, Seq[Long]] { (spark, sfDir) =>
+    Corpus.registerSources(spark, sfDir)
+    Similarity.topPrincipalComponent(spark.table("embeddings"), iters = 8)
+      .orderBy("dim").collect().map(_.getLong(1)).toSeq
+  }
 
   /** DuckDB mirror of Similarity.kmeansIvfSearch: the same Lloyd rounds
     * unrolled as CTE chains (c0 → a1 → c1 → a2 → c2 → final assign +

@@ -114,7 +114,7 @@ private[graft] object ExtStreamQueries {
         // eventsStream probes the footer and normalizes BOTH testdata ts
         // layouts (raw INT64 nanos vs timestamp[us]) — the r7 driver reds
         // came from hardcoding the nanos layout here.
-        val stream = eventsStream(spark, streamSourceDir(sfDir, "events.parquet"))
+        val stream = eventsStream(spark, streamSourceDir(spark, sfDir, "events.parquet"))
         val q = graft.streaming.IncrementalIndexer.userStates(spark, stream)
           .writeStream.outputMode("update")
           .format("memory").queryName("x_stream_user_state_sink")
@@ -155,7 +155,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         // dual-layout-safe ts_us via the footer-probing shared adapter
-        val stream = eventsStream(spark, streamSourceDir(sfDir, "events.parquet"))
+        val stream = eventsStream(spark, streamSourceDir(spark, sfDir, "events.parquet"))
         val q = graft.streaming.IncrementalIndexer
           .asofStream(spark, stream, refType = "view", queryType = "click")
           .writeStream.outputMode("update")
@@ -185,7 +185,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         // dual-layout-safe ts_us via the footer-probing shared adapter
-        val stream = eventsStream(spark, streamSourceDir(sfDir, "events.parquet"))
+        val stream = eventsStream(spark, streamSourceDir(spark, sfDir, "events.parquet"))
         val q = graft.streaming.IncrementalIndexer
           .funnelStream(spark, stream, Seq("view", "click", "purchase"))
           .writeStream.outputMode("update")
@@ -221,7 +221,7 @@ private[graft] object ExtStreamQueries {
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
           StructField("n_chars", LongType)))
-        val srcDir = streamSourceDir(sfDir, "documents.parquet")
+        val srcDir = streamSourceDir(spark, sfDir, "documents.parquet")
         val stream = spark.readStream.schema(schema).parquet(srcDir)
         val q = graft.streaming.IncrementalIndexer.dedupStream(spark, stream)
           .writeStream.outputMode("update")
@@ -254,7 +254,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         // dual-layout-safe ts_us via the footer-probing shared adapter
-        val stream = eventsStream(spark, streamSourceDir(sfDir, "events.parquet"))
+        val stream = eventsStream(spark, streamSourceDir(spark, sfDir, "events.parquet"))
         val q = graft.streaming.IncrementalIndexer
           .sessionStream(spark, stream, gapUs = 4L * 3600 * 1000000)
           .writeStream.outputMode("update")
@@ -283,7 +283,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         // dual-layout-safe ts_us via the footer-probing shared adapter
-        val stream = eventsStream(spark, streamSourceDir(sfDir, "events.parquet"))
+        val stream = eventsStream(spark, streamSourceDir(spark, sfDir, "events.parquet"))
         val q = graft.streaming.IncrementalIndexer
           .rollingStream(spark, stream, windowUs = 86400L * 1000000)
           .writeStream.outputMode("update")
@@ -321,7 +321,7 @@ private[graft] object ExtStreamQueries {
         // 4-file copy for a REAL multi-batch run; eventsStream probes the
         // copy's footer, so whichever ts layout the copy preserved from
         // the source testdata is normalized the same way as batch
-        val srcDir = multiFileSourceDir(spark, sfDir, "events.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "events.parquet")
         val stream = eventsStream(spark, srcDir, maxFilesPerTrigger = 2)
           .select("ts", "event_type", "value")
         val q = graft.streaming.IncrementalIndexer.windowedCents(stream)
@@ -360,7 +360,7 @@ private[graft] object ExtStreamQueries {
     QueryDef("x_stream_join",
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
-        val srcDir = multiFileSourceDir(spark, sfDir, "events.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "events.parquet")
         val stream = eventsStream(spark, srcDir, maxFilesPerTrigger = 2)
           .select("event_id", "user_id", "ts", "event_type")
         val q = graft.streaming.IncrementalIndexer
@@ -408,7 +408,7 @@ private[graft] object ExtStreamQueries {
             "text", "doc_id", 13)
           .select(col("shingle")).distinct().persist()
         benchGrams.count() // the fixed benchmark artifact, built once
-        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet")
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
@@ -453,7 +453,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         import org.apache.spark.sql.types._
-        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet")
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
@@ -491,7 +491,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         val stream = eventsStream(spark,
-          multiFileSourceDir(spark, sfDir, "events.parquet", 4),
+          multiFileSourceDir(spark, sfDir, "events.parquet"),
           maxFilesPerTrigger = 2)
         val q = stream
           .withWatermark("ts", "3650 days")
@@ -533,7 +533,7 @@ private[graft] object ExtStreamQueries {
         import org.apache.spark.sql.types._
         val comps = dupComponentsArtifact(spark, sfDir)
           .withColumnRenamed("component", "__comp")
-        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet")
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
@@ -596,7 +596,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         // dual-layout-safe via the footer-probing shared adapter
-        val stream = eventsStream(spark, streamSourceDir(sfDir, "events.parquet"))
+        val stream = eventsStream(spark, streamSourceDir(spark, sfDir, "events.parquet"))
         val q = graft.streaming.IncrementalIndexer.topkStream(spark, stream, k = 3)
           .writeStream.outputMode("update")
           .format("memory").queryName("x_stream_topk_sink")
@@ -623,7 +623,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         // dual-layout-safe ts_us via the footer-probing shared adapter
-        val stream = eventsStream(spark, streamSourceDir(sfDir, "events.parquet"))
+        val stream = eventsStream(spark, streamSourceDir(spark, sfDir, "events.parquet"))
         val q = graft.streaming.IncrementalIndexer
           .threadStream(spark, stream, gapUs = 4L * 3600 * 1000000,
             maxSteps = 20)
@@ -655,7 +655,7 @@ private[graft] object ExtStreamQueries {
         Corpus.registerSources(spark, sfDir)
         import org.apache.spark.sql.types._
         val centroids = Corpus.ivfIndex(spark, sfDir).centroids
-        val srcDir = multiFileSourceDir(spark, sfDir, "embeddings.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "embeddings.parquet")
         val schema = StructType(Seq(
           StructField("vec_id", LongType),
           StructField("embedding", ArrayType(FloatType)),
@@ -719,7 +719,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         import org.apache.spark.sql.types._
-        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet")
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
@@ -776,7 +776,7 @@ private[graft] object ExtStreamQueries {
           .filter(col("doc_id") % 5 =!= 0)
           .select(col("doc_id").as("corpus_id"), col("__arr").as("__hc"),
             col("n_sh").as("n_c"))
-        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet")
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
@@ -828,7 +828,7 @@ private[graft] object ExtStreamQueries {
           .filter(col("doc_id") % 5 =!= 0)
           .select(col("doc_id").as("corpus_id"), col("__arr").as("__hc"),
             col("n_sh").as("n_c"))
-        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet")
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
@@ -898,7 +898,7 @@ private[graft] object ExtStreamQueries {
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
         import org.apache.spark.sql.types._
-        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "documents.parquet")
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
@@ -949,7 +949,7 @@ private[graft] object ExtStreamQueries {
     QueryDef("x_stream_cusum",
       (spark, sfDir) => {
         Corpus.registerSources(spark, sfDir)
-        val srcDir = multiFileSourceDir(spark, sfDir, "events.parquet", 4)
+        val srcDir = multiFileSourceDir(spark, sfDir, "events.parquet")
         val stream = eventsStream(spark, srcDir, maxFilesPerTrigger = 2)
         val q = stream
           .groupBy(expr("ts_us DIV 86400000000").as("day"))

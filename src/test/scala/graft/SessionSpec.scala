@@ -35,6 +35,14 @@ class SessionSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  test("src/main memoizes no Spark state outside Artifact") {
+    // DisplayTemplate's memo holds compiled templates, not Spark state
+    val allowed = Seq("/graft/Artifact.scala:", "/graft/serve/DisplayTemplate.scala:")
+    val found = hits(Seq("src/main/scala"), Seq("TrieMap"))
+      .filterNot(h => allowed.exists(h.contains))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("a new session resolves sorted_intersect from the extension alone") {
     val s = TestSpark.spark.newSession()
     val got = s.sql("SELECT sorted_intersect(array(1L, 3L, 5L), array(3L, 5L, 7L))")
